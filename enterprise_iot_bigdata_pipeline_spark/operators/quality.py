@@ -55,17 +55,6 @@ def quality_report(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
     )
 
 
-def telemetry_rules() -> dict[str, str]:
-    """The reference workload's invariants as SQL predicates (shared with
-    the oracle generator in plans.ingest)."""
-    return {
-        "null_heartbeat": "heartbeat IS NULL",
-        "sentinel_gpsspeed": "gpsspeed = -9999",
-        "invalid_gps": "gpslat < -8880",
-        "negative_speed": "gpsspeed < 0 AND gpsspeed != -9999",
-    }
-
-
 def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Per-column profile: rows, non-null count, exact distinct count —
     the scan-level health report a curation run records before training.
@@ -91,14 +80,3 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
         (F.col("n_rows") - F.col("n_non_null")).alias("n_null"),
         "n_distinct",
     )
-
-
-def assert_quality(df: DataFrame, rules: dict[str, Column], max_rate: float = 0.05) -> None:
-    """Gate: raise if any rule's violation rate exceeds ``max_rate``."""
-    bad = [
-        (r["rule"], r["violation_rate"])
-        for r in quality_report(df, rules).collect()
-        if (r["violation_rate"] or 0.0) > max_rate
-    ]
-    if bad:
-        raise ValueError(f"quality gate failed: {bad}")

@@ -83,63 +83,59 @@ def register(name: str, oracle: str | None = None, late: bool = False):
 # (latest driver-sampled round, name) — never-sampled names first, then
 # the stalest evidence. tests/test_rotation.py asserts this literal
 # matches the computation, so the list stays reviewable while drift from
-# the policy is a test failure. The round-12 window below samples the
-# never-driver-sampled r12 registrations first (audio_spectral_bins,
-# curation_dsir_weights, dedup_semantic_clusters), then the 47 stalest
-# driver rows: the remaining r7 cohort (text suite tail, graph, TPC-H
-# join shapes, streaming slots, the timeseries battery).
+# the policy is a test failure.
 # Regenerate with:  python tools/rotation.py --emit
 _PRIORITY = [
-    "timeseries_histogram",
-    "timeseries_interpolate",
-    "timeseries_m4_downsample",
-    "timeseries_mad_outliers",
-    "timeseries_mase_baseline",
-    "timeseries_range_window",
-    "timeseries_seasonal_profile",
-    "timeseries_stl_decompose",
-    "timeseries_time_weighted_avg",
-    "timeseries_trend_ols",
-    "timeseries_winsorize",
-    "users_rfm_segments",
-    "csv_extract_fields",
-    "events_ab_test_summary",
-    "events_attribution_touch",
-    "events_benford_audit",
-    "events_chi_square",
-    "events_column_entropy",
-    "events_countmin_freq",
-    "events_cumulative_users",
-    "events_dau_mau",
-    "events_decayed_type_weight",
-    "events_fill_gaps",
-    "events_grid_hotspots",
-    "events_interval_islands",
-    "events_key_skew_profile",
-    "events_kmv_distinct",
-    "events_kmv_type_overlap",
-    "events_pattern_match",
-    "events_psi_drift",
-    "events_quartile_banded",
-    "events_rank_battery",
-    "events_relational_division",
-    "events_rolling_wau",
-    "events_session_window_agg",
-    "events_spatial_pairs",
-    "events_top_paths",
-    "events_transition_dwell",
-    "events_transition_matrix",
-    "events_type_cooccurrence",
-    "events_value_quartiles",
-    "funnel_view_click_purchase",
-    "join_blame_suppliers",
-    "join_bloom_prune",
-    "join_disjunctive_revenue",
-    "join_fuzzy_names",
-    "join_interval_overlap",
-    "join_point_in_time",
-    "join_small_quantity_revenue",
-    "join_snapshot_diff",
+    "join_supplier_diversity",
+    "join_top_supplier_quarter",
+    "json_extract_fields",
+    "lake_sorted_roundtrip",
+    "lake_zorder_roundtrip",
+    "orders_backlog_profile",
+    "orders_cohort_ltv",
+    "orders_fulfillment_latency",
+    "orders_price_reconcile",
+    "streaming_checkpoint_recovery",
+    "variant_extract_fields",
+    "xml_extract_fields",
+    "agg_approx_distinct",
+    "agg_conditional_having",
+    "agg_count_distinct",
+    "agg_distributions",
+    "agg_grouping_multi",
+    "agg_mode_per_group",
+    "agg_pivot",
+    "agg_pricing_summary",
+    "agg_sliding_window",
+    "agg_unpivot_stats",
+    "agg_value_stats",
+    "ann_hard_negatives",
+    "asof_purchase_click",
+    "basket_part_pairs_lift",
+    "cohort_weekly_retention",
+    "distinct_multi",
+    "embeddings_corr_probe",
+    "embeddings_label_centroids",
+    "embeddings_sparsify_topm",
+    "epoch_normalize_multiscale",
+    "events_heavy_hitters",
+    "fifo_return_allocation",
+    "filter_suite",
+    "flagship_minute_resample",
+    "funnel_time_to_convert",
+    "join_five_way",
+    "join_large_orders",
+    "join_nation_pairs",
+    "join_semi_anti",
+    "join_top_revenue",
+    "mixture_water_fill",
+    "parse_s3_keys",
+    "parts_pareto_abc",
+    "proj_enrich_union",
+    "quality_fk_orphans",
+    "range_join_click_purchase",
+    "sales_hierarchy_shares",
+    "sample_weighted_topn",
 ]
 
 # Re-entrancy: three oracle builders (ann_recall_eval, dedup_recall_eval,

@@ -933,7 +933,7 @@ def events_attribution_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), legs AS (
         -- the t_view/t_click pins are implied (t_click non-NULL requires
         -- a t_view to anchor on) but stated explicitly so the latency is
-        -- PROVABLY non-NULL as a rank key (tools/null_audit.py)
+        -- PROVABLY non-NULL as a rank key (tools/gate.py null check)
         SELECT 'view_to_click' AS leg, user_id,
                epoch_us(t_click) - epoch_us(t_view) AS lat_us
         FROM per_user WHERE t_click IS NOT NULL AND t_view IS NOT NULL

@@ -425,7 +425,10 @@ def _part_pair_edges(li: DataFrame, min_w: int) -> DataFrame:
     from enterprise_iot_bigdata_pipeline_spark.operators.dedup import _pairs_of_sorted
 
     return (
-        li.groupBy("o")
+        # the join it replaced (a.o = b.o) never paired NULL order keys;
+        # groupBy keeps NULL as a group, so drop them first
+        li.filter(F.col("o").isNotNull())
+        .groupBy("o")
         .agg(F.array_sort(F.collect_list("p")).alias("ps"))
         .select(F.explode(_pairs_of_sorted(F.col("ps"))).alias("q"))
         .filter(F.col("q.a") < F.col("q.b"))

@@ -22,9 +22,9 @@ from enterprise_iot_bigdata_pipeline_spark.plans.tables import t
 
 # Audit hook: each streaming slot records its last EXECUTED streaming
 # physical plan here (explainInternal after the availableNow run), so
-# tools/explain_audit.py can assert the state-store/watermark properties
-# that the returned BATCH frame (a memory-sink/parquet readback) cannot
-# show. Capture-only — never load-bearing for the query result.
+# the gate's explain check (tools/gate.py) can assert the state-store/
+# watermark properties that the returned BATCH frame (a memory-sink/parquet
+# readback) cannot show. Capture-only — never load-bearing for the query result.
 STREAM_PLANS: dict[str, str] = {}
 
 

@@ -401,7 +401,7 @@ def _fir_oracle() -> str:
     # ts IS NOT NULL both engines: lag() taps read NEIGHBORS in time
     # order, so NULL-ts placement (Spark first / DuckDB last) changes
     # which rows smooth into which — the uniform r9 pin, enforced by the
-    # decorrelated-value nasty battery + tools/null_audit.py
+    # decorrelated-value nasty battery + the null check (tools/gate.py)
     return f"""
     SELECT event_id, ts, event_type, value,
            CASE WHEN ({den}) > 0.0
@@ -659,7 +659,7 @@ _RANGE_S = 3600
     WITH e AS (
         -- ts IS NOT NULL both engines: a NULL epoch has no trailing-hour
         -- frame, and the engines disagree on where the NULL peer group
-        -- sits in RANGE windows (null_audit standing lint)
+        -- sits in RANGE windows (the standing null check)
         SELECT event_id, ts, event_type, value,
                CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
         FROM events

@@ -37,13 +37,6 @@ def read_jdbc_query(spark: SparkSession, url: str, query: str, **options) -> Dat
     )
 
 
-def write_jdbc_table(df: DataFrame, url: str, table: str, mode: str = "append", **options) -> None:
-    """Bulk state append (one executor connection per partition)."""
-    df.write.format("jdbc").option("url", url).option("dbtable", table).options(
-        **options
-    ).mode(mode).save()
-
-
 def execute_sql(spark: SparkSession, url: str, statements: list[str]) -> None:
     """Driver-side DDL/DML (CREATE TABLE, seeds) in one autocommit session."""
     conn = spark._jvm.java.sql.DriverManager.getConnection(url)

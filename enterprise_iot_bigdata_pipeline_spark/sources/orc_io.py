@@ -67,9 +67,3 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     except Exception as ex:  # noqa: BLE001 — classified and re-raised
         _gate_avro(ex)
 
-
-def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    try:
-        df.write.mode(mode).format("avro").save(path)
-    except Exception as ex:  # noqa: BLE001 — classified and re-raised
-        _gate_avro(ex)

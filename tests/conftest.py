@@ -25,3 +25,13 @@ def spark(tmp_path_factory):
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def registry_gate(spark):
+    """One walk of the registry under the plan lints and the vacuity check
+    (tools/gate.py): every batch frame at sf0.001 is built once and shared
+    by null, replay, scan and vacuity."""
+    from tools.gate import run
+
+    return run(spark, ["null", "replay", "scan", "vacuity"])

@@ -8,6 +8,7 @@ anything passing here should pass the gate.
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import math
 
 import duckdb
@@ -60,6 +61,15 @@ def canonical_rows(df: pd.DataFrame) -> list[tuple[str, ...]]:
     rows = [tuple(_canon(v) for v in row) for row in df.itertuples(index=False, name=None)]
     rows.sort()
     return rows
+
+
+def canonical_hash(rows: list[tuple[str, ...]]) -> str:
+    """One digest of ``canonical_rows`` output: equal iff the rows are."""
+    h = hashlib.sha256()
+    for r in rows:
+        h.update("\x1f".join(r).encode())
+        h.update(b"\x1e")
+    return h.hexdigest()
 
 
 def compare(spark_df, oracle: str, con: duckdb.DuckDBPyConnection, name: str = "?") -> None:

@@ -1,65 +1,54 @@
-"""Parallelism-invariance gate (round-12 instrument).
+"""Parallelism- and ANSI-invariance gate.
 
-tools/invariance_probe.py executes every registered query under two
-degrees of parallelism (shuffle partitions 32 vs 7, input splits 4m vs
-512k) and compares canonical value-hashes, plus a DuckDB threads=1 vs 8
-determinism check on every oracle. A DOP-sensitive result (shuffle-order
-float sums, under-ordered windows, per-partition picks) is exactly the
-bug class that ships green from a fixed local[32] and corrupts answers
-at cluster DOP. Full-registry runs happen per-round via the tool; the
-pytest gate covers a rotating slice (cheap) plus a planted-bug
-self-test so the probe itself stays honest.
+The gate's dop check executes a query under two degrees of parallelism
+(shuffle partitions 32 vs 7, input splits 4m vs 512k) and compares
+canonical value-hashes, plus a DuckDB threads=1 vs 8 determinism check on
+its oracle. A DOP-sensitive result (shuffle-order float sums,
+under-ordered windows, per-partition picks) is exactly the bug class that
+ships green from a fixed local[32] and corrupts answers at cluster DOP.
+The ansi check does the same across spark.sql.ansi.enabled. Full-registry
+runs happen per round via ``python tools/gate.py dop ansi``; the pytest
+gate covers a rotating slice plus planted-bug self-tests so the checks
+themselves stay honest.
 """
 
 from __future__ import annotations
 
-import os
-import sys
 
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-)
+def _slice_problems(spark, check, lo, hi):
+    from enterprise_iot_bigdata_pipeline_spark.plans import _PRIORITY, load_all
+    from tools.gate import run
+
+    load_all()
+    return run(spark, [check], names=set(_PRIORITY[lo:hi])).problems()
+
+
+def _planted_findings(spark, check, fn):
+    from tools.gate import run
+
+    return run(spark, [check], queries={"planted": fn}).findings
 
 
 def test_probe_slice_is_dop_invariant(spark):
     """The driver-window rotation's first 12 names (the least-recently
-    driver-verified queries) under the full probe — the whole registry
-    runs per-round via the tool (see DEVNOTES for artifacts)."""
-    from enterprise_iot_bigdata_pipeline_spark.plans import _PRIORITY, load_all
-    from tools.invariance_probe import probe_rows, violations_outside_exemptions
-
-    load_all()
-    names = set(_PRIORITY[:12])
-    rows = probe_rows(spark, names)
-    unexempted, stale = violations_outside_exemptions(rows, audited=names)
-    msg = "\n".join(f"{n}: {'; '.join(vs)}" for n, vs in unexempted)
-    assert not unexempted and not stale, msg
+    driver-verified queries) under the full dop check."""
+    problems = _slice_problems(spark, "dop", 0, 12)
+    assert not problems, "\n".join(problems)
 
 
 def test_probe_slice_is_ansi_invariant(spark):
-    """Second axis (round 12): values must not depend on
-    spark.sql.ansi.enabled — production clusters commonly run false (the
-    pre-Spark-4 default), and a silent NULL-where-ANSI-raises or a
-    wrapping cast would give different answers on identical data. Full
-    registry per-round via the tool (--axis ansi); rotating slice here."""
-    from enterprise_iot_bigdata_pipeline_spark.plans import _PRIORITY, load_all
-    from tools.invariance_probe import probe_rows, violations_outside_exemptions
-
-    load_all()
-    names = set(_PRIORITY[18:26])
-    rows = probe_rows(spark, names, axis="ansi")
-    unexempted, stale = violations_outside_exemptions(rows, audited=names)
-    msg = "\n".join(f"{n}: {'; '.join(vs)}" for n, vs in unexempted)
-    assert not unexempted and not stale, msg
+    """Values must not depend on spark.sql.ansi.enabled — production
+    clusters commonly run false (the pre-Spark-4 default), and a silent
+    NULL-where-ANSI-raises or a wrapping cast would give different answers
+    on identical data."""
+    problems = _slice_problems(spark, "ansi", 18, 26)
+    assert not problems, "\n".join(problems)
 
 
 def test_probe_detects_planted_ansi_sensitivity(spark):
-    """Self-test: a query whose values change with the ANSI flag (here a
-    try-division that is NULL under ansi=true semantics differences is
-    hard to plant portably, so plant the flag itself) must be flagged."""
+    """Self-test: a query whose values change with the ANSI flag must be
+    flagged (the flag itself is planted into the output)."""
     from pyspark.sql import functions as F
-
-    from tools.invariance_probe import probe_query
 
     def planted(spark, sf_dir):
         df = spark.read.parquet(f"{sf_dir}/orders.parquet").limit(5)
@@ -69,8 +58,8 @@ def test_probe_detects_planted_ansi_sensitivity(spark):
             F.lit(spark.conf.get("spark.sql.ansi.enabled")).alias("mode"),
         )
 
-    vs = probe_query(spark, planted, axis="ansi")
-    assert any("ansi-sensitive" in v for v in vs), vs
+    found = _planted_findings(spark, "ansi", planted)
+    assert any("ansi-sensitive" in f for fs in found.values() for f in fs), found
 
 
 def test_probe_detects_planted_dop_sensitivity(spark):
@@ -79,8 +68,6 @@ def test_probe_detects_planted_dop_sensitivity(spark):
     discipline must not."""
     from pyspark.sql import functions as F
 
-    from tools.invariance_probe import probe_query
-
     def planted(spark, sf_dir):
         # spark_partition_id leaks the physical DOP straight into values
         df = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -88,8 +75,8 @@ def test_probe_detects_planted_dop_sensitivity(spark):
             F.count(F.lit(1)).alias("n")
         )
 
-    vs = probe_query(spark, planted)
-    assert any("dop-sensitive" in v for v in vs), vs
+    found = _planted_findings(spark, "dop", planted)
+    assert any("dop-sensitive" in f for fs in found.values() for f in fs), found
 
     def honest(spark, sf_dir):
         df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -98,4 +85,4 @@ def test_probe_detects_planted_dop_sensitivity(spark):
             F.sum(F.col("l_quantity").cast("decimal(25,6)")).alias("q")
         )
 
-    assert probe_query(spark, honest) == []
+    assert _planted_findings(spark, "dop", honest) == {}

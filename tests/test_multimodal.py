@@ -2,10 +2,23 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+
+# The source repository's checkout: its media/ PNGs and JPEGs are
+# real-world decoder fixtures, absent where only the package is checked out.
+REFERENCE_DIR = "/root/reference"
+
+
+def _needs_reference(sub: str):
+    path = os.path.join(REFERENCE_DIR, sub)
+    return pytest.mark.skipif(
+        not os.path.isdir(path), reason=f"reference media {path} not present"
+    )
 
 
 @pytest.fixture(scope="module")
@@ -249,6 +262,7 @@ def test_png_adam7_interlaced_roundtrip():
         assert out["pixels"] == parse_png(encode_png(w, h, px, nc))["pixels"]
 
 
+@_needs_reference("media")
 def test_reference_pngs_decode_via_read_media_dir(spark):
     """The reference repo's own media/*.png are real-world fixtures: the
     binaryFile ingest + pure-Python PNG decode (stdlib zlib inflate +
@@ -260,7 +274,7 @@ def test_reference_pngs_decode_via_read_media_dir(spark):
         read_media_dir,
     )
 
-    media = read_media_dir(spark, "/root/reference/media", glob="*.png")
+    media = read_media_dir(spark, f"{REFERENCE_DIR}/media", glob="*.png")
     enriched = decode_enrich(media)
     rows = {
         r["source_file"].rsplit("/", 1)[-1]: r["meta"] for r in enriched.collect()
@@ -454,6 +468,7 @@ def test_jpeg_progressive_spectral_only_and_decode_media(spark):
     assert (row["width"], row["height"]) == (70, 50)
 
 
+@_needs_reference("v1-basic-etl/media")
 def test_reference_jpegs_decode_via_read_media_dir(spark):
     """The reference repo's v1-basic-etl/media/*.jpeg (baseline SOF0,
     4:2:0) are real-world fixtures: binaryFile ingest + the pure-numpy
@@ -466,7 +481,7 @@ def test_reference_jpegs_decode_via_read_media_dir(spark):
     )
 
     media = read_media_dir(
-        spark, "/root/reference/v1-basic-etl/media", glob="*.jpeg", id_from_name=False
+        spark, f"{REFERENCE_DIR}/v1-basic-etl/media", glob="*.jpeg", id_from_name=False
     )
     enriched = decode_enrich(media)
     rows = {

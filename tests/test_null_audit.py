@@ -1,38 +1,17 @@
-"""NULL-semantics lint as a suite gate (round-10 verdict task 3).
+"""NULL-semantics lint as a suite gate.
 
-tools/null_audit.py walks every registered batch query's optimized plan
+The gate's null check walks every registered batch query's optimized plan
 for the two mechanically-detectable cross-engine divergence classes the
 round-9 batteries kept finding one at a time: un-pinned nullable ORDER
-keys where order changes values (window orderSpec, limit-feeding
-sorts), and nullable BOOLEAN output columns. Registrations are
-conscripted at run time, so a future query with an un-pinned nullable
-sort key fails here before any battery or driver round can diverge.
-
-The exemption ledger in the tool carries a written reason per entry and
-is itself asserted: an exemption that stops firing must be deleted.
+keys where order changes values (window orderSpec, limit-feeding sorts),
+and nullable BOOLEAN output columns. Registrations are conscripted at run
+time, so a future query with an un-pinned nullable sort key fails here
+before any battery or driver round can diverge.
 """
 
 from __future__ import annotations
 
-import os
-import sys
 
-from conftest import SF_SMOKE
-
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-)
-
-
-def test_registry_clean_under_null_audit(spark):
-    from tools.null_audit import audit_rows, violations_outside_exemptions
-
-    rows = audit_rows(spark, SF_SMOKE)
-    unexempted, stale = violations_outside_exemptions(rows)
-    msg = "\n".join(f"{name}: {'; '.join(vs)}" for name, vs in unexempted) + (
-        "\nSTALE exemptions (fix no longer needed — delete the entry): "
-        + ", ".join(stale)
-        if stale
-        else ""
-    )
-    assert not unexempted and not stale, msg
+def test_registry_clean_under_null_audit(registry_gate):
+    problems = registry_gate.problems("null")
+    assert not problems, "\n".join(problems)

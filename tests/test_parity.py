@@ -76,15 +76,11 @@ def test_explain_audit_assertions_green(spark):
     Arrow-batched Python, curate's no-recompute checkpoint. Runs at sf0.01
     (the audit's own scale: some join strategies are size-dependent —
     at smoke scale every side broadcasts and the SMJ check can't bind)."""
-    import sys
-
     from tests.conftest import SF_CORRECT
+    from tools.gate import run
 
-    sys.path.insert(0, "/root/repo/tools")
-    from explain_audit import collect_audit
-
-    _, failures = collect_audit(spark, SF_CORRECT)
-    assert failures == [], f"plan checks failed: {failures}"
+    problems = run(spark, ["explain"], sf_dirs=[SF_CORRECT]).problems()
+    assert not problems, "\n".join(problems)
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])

@@ -1,44 +1,21 @@
-"""Struct-replay lint as a suite gate (round-10 verdict task 3 for r11).
+"""Struct-replay lint as a suite gate.
 
-tools/replay_audit.py mechanizes the design rule born from the
+The gate's replay check mechanizes the design rule born from the
 join_point_in_time desync (DEVNOTES session 4; plans/analytic.py:1135):
 multi-column as-of/replay state must travel as ONE
-last(struct(...), ignorenulls=True) read. The audit walks every
-registered batch query's optimized plan and flags >= 2 ignore-nulls
-first/last/lag reads of DISTINCT arguments sharing one window spec —
-the shape where independent NULL placement lets one logical row be
-reconstructed from two different source rows. Registrations are
-conscripted at run time, so a future query with the desync shape fails
-here before any battery or driver round can diverge.
-
-The exemption ledger in the tool carries a written reason per entry and
-is itself asserted: an exemption that stops firing must be deleted.
+last(struct(...), ignorenulls=True) read. It walks every registered batch
+query's optimized plan and flags >= 2 ignore-nulls first/last/lag reads of
+DISTINCT arguments sharing one window spec — the shape where independent
+NULL placement lets one logical row be reconstructed from two different
+source rows.
 """
 
 from __future__ import annotations
 
-import os
-import sys
 
-from conftest import SF_SMOKE
-
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-)
-
-
-def test_registry_clean_under_replay_audit(spark):
-    from tools.replay_audit import audit_rows, violations_outside_exemptions
-
-    rows = audit_rows(spark, SF_SMOKE)
-    unexempted, stale = violations_outside_exemptions(rows)
-    msg = "\n".join(f"{name}: {'; '.join(vs)}" for name, vs in unexempted) + (
-        "\nSTALE exemptions (fix no longer needed — delete the entry): "
-        + ", ".join(stale)
-        if stale
-        else ""
-    )
-    assert not unexempted and not stale, msg
+def test_registry_clean_under_replay_audit(registry_gate):
+    problems = registry_gate.problems("replay")
+    assert not problems, "\n".join(problems)
 
 
 def test_audit_detects_the_desync_shape(spark):
@@ -48,7 +25,7 @@ def test_audit_detects_the_desync_shape(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from tools.replay_audit import audit_query
+    from tools.gate import replay_findings
 
     df = spark.createDataFrame(
         [(1, 1, None), (1, 2, "A"), (1, None, None)],
@@ -62,7 +39,7 @@ def test_audit_detects_the_desync_shape(spark):
         F.last("version", ignorenulls=True).over(w).alias("v"),
         F.last("status", ignorenulls=True).over(w).alias("s"),
     )
-    assert audit_query(buggy), "separate ignore-nulls reads must be flagged"
+    assert replay_findings(buggy), "separate ignore-nulls reads must be flagged"
 
     fixed = df.select(
         "k",
@@ -70,7 +47,7 @@ def test_audit_detects_the_desync_shape(spark):
         .over(w)
         .alias("dim"),
     ).select("k", "dim.version", "dim.status")
-    assert audit_query(fixed) == [], "atomic struct replay must pass"
+    assert replay_findings(fixed) == [], "atomic struct replay must pass"
 
     # first+last of ONE column over one spec is intentional (attribution
     # first/last touch) — two different rows is the semantics, not a bug
@@ -79,4 +56,4 @@ def test_audit_detects_the_desync_shape(spark):
         F.first("status", ignorenulls=True).over(w).alias("a"),
         F.last("status", ignorenulls=True).over(w).alias("b"),
     )
-    assert audit_query(mixed) == []
+    assert replay_findings(mixed) == []

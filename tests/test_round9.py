@@ -6,7 +6,7 @@
    The r8 resolver wrongly defaulted every traf to the moof start.
 2. Hybrid layout (populated stbl AND moof fragments): the fragments'
    samples must be appended, not silently dropped.
-3. scan_audit ERROR rows must fail the audit, not slide under the cap.
+3. Scan-check error rows must fail the gate, not slide under the cap.
 4. with_bucketed_prefix(agg='sum') rejects non-exact value types (double
    sums reassociate and break the single-window oracle equality).
 """
@@ -161,14 +161,20 @@ class TestHybridStblPlusFragments:
 
 
 class TestScanAuditErrors:
-    def test_error_rows_counted_as_failures(self):
-        # main()'s bad-row filter must catch n == -1 rows; replicate the
-        # filter expression on a synthetic row set (running the full audit
-        # lives in test_scan_audit.py).
-        rows = [(3, 2, "ok_query"), (-1, 0, "broken  ERROR boom")]
-        cap = 12
-        bad = [r for r in rows if r[0] > cap or r[0] < 0]
-        assert bad == [(-1, 0, "broken  ERROR boom")]
+    def test_error_rows_counted_as_failures(self, spark):
+        # a query that throws during plan build must fail the scan check,
+        # not slide under the cap it was supposed to be gated by
+        from tools.gate import run
+
+        def ok_query(spark, sf_dir):
+            return spark.read.parquet(f"{sf_dir}/orders.parquet")
+
+        def broken(spark, sf_dir):
+            raise RuntimeError("boom")
+
+        report = run(spark, ["scan"], queries={"ok_query": ok_query, "broken": broken})
+        assert [name for _, _, name, _ in report.unexempted()] == ["broken"]
+        assert "boom" in report.problems()[0]
 
 
 class TestPrefixExactTypeGuard:

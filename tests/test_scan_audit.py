@@ -1,33 +1,21 @@
-"""Registry-wide scan-count gate (verdict r8 task: audit as a suite test).
+"""Registry-wide scan-count gate.
 
 Spark does not fire ReusedExchange across arbitrary branch shapes, so a
 multiply-consumed reduction silently re-scans the fact table once per
-consumer — at 100 TB that multiplier is the whole query cost. The hand
-tool (tools/scan_audit.py) found 22-scan plans in round 8; this test
-makes the cap a permanent suite invariant so the next multiply-consumed
-reduction fails pytest, not a manual audit.
-
-ERROR rows (a query that throws during plan build) are failures too — a
-broken query must not slide under the cap it was supposed to be gated by
-(ADVICE r8).
+consumer — at 100 TB that multiplier is the whole query cost. The gate's
+scan check caps parquet scans per executed plan, so the next
+multiply-consumed reduction fails pytest, not a manual audit. A query
+that throws during plan build is an error finding, never exempt.
 """
 
 from __future__ import annotations
 
-from conftest import SF_SMOKE
 
-SCAN_CAP = 12  # above every legitimate multi-scan shape in the registry
-
-
-def test_registry_scan_counts_under_cap(spark):
-    from tools.scan_audit import audit_rows
-
-    rows = audit_rows(spark, SF_SMOKE)
-    assert rows, "scan audit produced no rows — registry failed to load"
-    errored = [name for n, _, name in rows if n < 0]
-    assert not errored, f"queries errored during scan audit: {errored}"
-    over = [(n, name) for n, _, name in rows if n > SCAN_CAP]
-    assert not over, (
-        f"plans exceed the {SCAN_CAP}-scan cap (multiply-consumed reduction? "
-        f"checkpoint the SMALL reduction — see tools/scan_audit.py): {over}"
+def test_registry_scan_counts_under_cap(registry_gate):
+    audited = {name for c, _, name in registry_gate.audited if c == "scan"}
+    assert audited, "scan check audited nothing — registry failed to load"
+    problems = registry_gate.problems("scan")
+    assert not problems, (
+        "multiply-consumed reduction? checkpoint the SMALL reduction:\n"
+        + "\n".join(problems)
     )

@@ -1,38 +1,21 @@
-"""Vacuity gate over the registry (round-11 verdict task 4).
+"""Vacuity gate over the registry.
 
 A green oracle hash proves Spark and DuckDB agree, not that the query
 computes anything — empty, constant, or input-independent outputs
-hash-match trivially. tools/vacuity_audit.py EXECUTES every registered
+hash-match trivially. The gate's vacuity check EXECUTES every registered
 query at sf0.001/sf0.01 (escalating identical pairs to sf0.1, where the
 documents/embeddings tables first grow) and flags empty, constant, and
 scale-insensitive outputs. Registrations are conscripted at run time, so
 a future query whose output never moves with the data fails here before
-a driver round can green-stamp it. The exemption ledger carries a
-written reason per entry and is asserted to still fire.
+a driver round can green-stamp it.
 """
 
 from __future__ import annotations
 
-import os
-import sys
 
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-)
-
-
-def test_registry_clean_under_vacuity_audit(spark):
-    from tools.vacuity_audit import audit_rows, violations_outside_exemptions
-
-    rows = audit_rows(spark)
-    unexempted, stale = violations_outside_exemptions(rows)
-    msg = "\n".join(f"{name}: {'; '.join(vs)}" for name, vs in unexempted) + (
-        "\nSTALE exemptions (behavior gone — delete the entry): "
-        + ", ".join(stale)
-        if stale
-        else ""
-    )
-    assert not unexempted and not stale, msg
+def test_registry_clean_under_vacuity_audit(registry_gate):
+    problems = registry_gate.problems("vacuity")
+    assert not problems, "\n".join(problems)
 
 
 def test_audit_catches_planted_vacuous_queries(spark):
@@ -41,7 +24,7 @@ def test_audit_catches_planted_vacuous_queries(spark):
     reads the corpus must not."""
     from pyspark.sql import functions as F
 
-    from tools.vacuity_audit import audit_query
+    from tools.gate import run
 
     def planted_constant(spark, sf_dir):
         return spark.range(16).select(F.lit("x").alias("c"))
@@ -60,10 +43,23 @@ def test_audit_catches_planted_vacuous_queries(spark):
             .agg(F.count(F.lit(1)).alias("n"))
         )
 
-    vs = audit_query(spark, planted_constant)
-    assert any(v.startswith("constant") for v in vs), vs
-    assert any(v.startswith("scale-insensitive") for v in vs), vs
-    assert audit_query(spark, planted_empty)[0].startswith("empty")
-    vs = audit_query(spark, planted_scale_blind)
-    assert any(v.startswith("scale-insensitive") for v in vs), vs
-    assert audit_query(spark, honest) == []
+    planted = {
+        "constant": planted_constant,
+        "empty": planted_empty,
+        "scale_blind": planted_scale_blind,
+        "honest": honest,
+    }
+    report = run(spark, ["vacuity"], queries=planted)
+
+    def kinds(name):
+        return {
+            f.split(":", 1)[0]
+            for (_, _, n), fs in report.findings.items()
+            if n == name
+            for f in fs
+        }
+
+    assert {"constant", "scale-insensitive"} <= kinds("constant"), report.findings
+    assert kinds("empty") == {"empty"}, report.findings
+    assert kinds("scale_blind") == {"scale-insensitive"}, report.findings
+    assert kinds("honest") == set(), report.findings

@@ -1,4 +1,4 @@
-"""Recompute the null-audit's NONNULL_KEYS whitelist from the data
+"""Recompute the null check's NONNULL_KEYS whitelist from the data
 (round-11 verdict task 6).
 
 The fifo_return_allocation NULL-ordering divergence hid for ten rounds
@@ -19,10 +19,9 @@ ps_suppkey sat in the whitelist for rounds naming columns that don't
 exist in this corpus — harmless today, but unused entries are exactly
 how the l_orderkey rot started.
 
-The EXEMPT ledgers in null_audit/replay_audit carry their own
-mechanical recomputation (stale entries — exemptions that stop firing —
-fail tests); this file closes the same loop for the column-property
-whitelist.
+The gate's EXEMPT ledger carries its own mechanical recomputation (stale
+entries — exemptions that stop firing — fail tests); this file closes the
+same loop for the column-property whitelist.
 """
 
 from __future__ import annotations
@@ -43,7 +42,7 @@ from test_nasty_embeddings import _nasty_vectors
 from test_nasty_events import _nasty_rows
 from test_nasty_orders import _nasty_lineitems, _nasty_orders
 
-from tools.null_audit import NONNULL_KEYS
+from tools.gate import NONNULL_KEYS
 
 SF_DIRS = [f"/root/testdata/sf{s}" for s in ("0.001", "0.01", "0.1")]
 

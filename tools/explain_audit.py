@@ -1,18 +1,17 @@
-"""Generate EXPLAIN.md: formatted physical plans for the headline queries
-plus automated plan-hygiene checks (pushdown, broadcast where expected,
-hash vs sort aggregation, exchange count).
+"""Plan-hygiene tables for the gate's explain check (tools/gate.py):
+which plan properties each operator is designed around (pushdown,
+broadcast where expected, hash vs sort aggregation, no cartesian, ...).
 
-Run: python tools/explain_audit.py [sf_dir]
+AUDITED orders EXPLAIN.md (every other registered query follows it);
+CHECKS maps a query to (needle, expected_present, why) assertions against
+its executed plan; STREAM_AUDITED slots are checked against the streaming
+plan they executed; CONF_OVERRIDES are session confs set while a query's
+plan is built.
+
+Run: python tools/gate.py explain
 """
 
 from __future__ import annotations
-
-import re
-import sys
-from pathlib import Path
-
-REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
 
 AUDITED = [
     "flagship_minute_resample",
@@ -1198,108 +1197,3 @@ CONF_OVERRIDES = {
     "sales_hierarchy_shares": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
     "orders_price_reconcile": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
 }
-
-
-def collect_audit(spark, sf_dir: str):
-    """Build every audited query's physical plan and run the CHECKS.
-    Returns (markdown_lines, failures) — importable from pytest so the
-    plan-hygiene assertions gate the suite, not just the doc refresh."""
-    from enterprise_iot_bigdata_pipeline_spark.plans import all_queries
-
-    queries = all_queries()
-    # The curated AUDITED order leads (stable diffs, hand-written checks);
-    # any registered query not yet listed is appended so a new registration
-    # can never silently miss the artifact (the bench_names convention).
-    # A curated name missing from the registry is a typo/rename — fail loud.
-    unknown = [n for n in AUDITED if n not in queries]
-    if unknown:
-        raise RuntimeError(f"explain_audit AUDITED names not in registry: {unknown}")
-    listed = set(AUDITED)
-    names = AUDITED + [n for n in queries if n not in listed]
-    out = [
-        "# EXPLAIN — physical plans of the headline queries",
-        "",
-        f"Generated by `tools/explain_audit.py` at `{sf_dir}`. Automated checks",
-        "assert the plan properties each operator is designed around.",
-        "",
-    ]
-    failures = []
-    for name in names:
-        overrides = CONF_OVERRIDES.get(name, {})
-        saved = {k: spark.conf.get(k, None) for k in overrides}
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        try:
-            df = queries[name](spark, sf_dir)
-            if name in STREAM_AUDITED:
-                from enterprise_iot_bigdata_pipeline_spark.plans.ingest import (
-                    STREAM_PLANS,
-                )
-
-                # the returned frame is a memory-sink/parquet readback;
-                # audit the streaming plan that actually executed.
-                # record_stream_plan swallows capture errors by design, so
-                # a missing entry must fail THIS slot's checks visibly —
-                # not KeyError the whole artifact.
-                plan = STREAM_PLANS.get(
-                    name, f"<streaming plan capture missing for {name}>"
-                )
-            else:
-                plan = df._jdf.queryExecution().executedPlan().toString()
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-        # for streaming slots the batch readback's simpleString is the
-        # WRONG plan to consult — checks run against the captured stream
-        # plan only
-        simple = (
-            "" if name in STREAM_AUDITED
-            else df._jdf.queryExecution().simpleString()
-        )
-        # count real shuffles only (broadcast/single-partition are cheap)
-        n_exchanges = len(re.findall(r"Exchange (hash|range)partitioning", plan))
-        out.append(f"## {name}")
-        out.append("")
-        if name in STREAM_AUDITED:
-            out.append(
-                "_streaming plan (explainInternal of the executed "
-                "availableNow run; the returned frame is the sink readback)_"
-            )
-            out.append("")
-        checks = CHECKS.get(name, [])
-        for needle, expected, why in checks:
-            ok = (needle in plan or needle in simple) == expected
-            mark = "✓" if ok else "✗ FAILED"
-            want = "present" if expected else "absent"
-            out.append(f"- {mark} `{needle}` {want} — {why}")
-            if not ok:
-                failures.append((name, needle))
-        out.append(f"- shuffle exchanges: {n_exchanges}")
-        out.append("")
-        out.append("```")
-        out.append(plan.strip()[:4000])
-        out.append("```")
-        out.append("")
-    return out, failures
-
-
-def main() -> None:
-    from enterprise_iot_bigdata_pipeline_spark.session import get_spark
-
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark(app_name="explain_audit")
-    out, failures = collect_audit(spark, sf_dir)
-    (REPO / "EXPLAIN.md").write_text("\n".join(out))
-    n_sections = sum(1 for line in out if line.startswith("## "))
-    print(f"wrote EXPLAIN.md ({n_sections} plans)")
-    if failures:
-        print("PLAN CHECK FAILURES:", failures)
-        sys.exit(1)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
