@@ -41,7 +41,7 @@ def build_parser() -> argparse.ArgumentParser:
     r = sub.add_parser("repair", help="rewrite misfiled rows to correct partitions")
     r.add_argument("--lake", required=True)
 
-    c = sub.add_parser("compact", help="rewrite each partition to ~1 file")
+    c = sub.add_parser("compact", help="rewrite each fragmented partition to 1 file")
     c.add_argument("--lake", required=True)
 
     d = sub.add_parser("dashboard", help="per-unit 1-minute speed analysis")
@@ -133,8 +133,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     elif args.cmd == "compact":
         from enterprise_iot_bigdata_pipeline_spark.operators.compaction import compact_partitions
 
-        compact_partitions(spark, args.lake)
-        print("compacted")
+        n = compact_partitions(spark, args.lake)
+        print(f"compacted {n} partitions")
     elif args.cmd == "dashboard":
         from enterprise_iot_bigdata_pipeline_spark.operators.dashboard import speed_analysis
 

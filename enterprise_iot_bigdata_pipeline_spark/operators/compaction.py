@@ -12,7 +12,7 @@ files were never deleted).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from enterprise_iot_bigdata_pipeline_spark.functions.epoch import normalize_epoch_auto, to_local
@@ -107,7 +107,8 @@ def audit_misfiled(lake: DataFrame, tz_hours: int = 8) -> DataFrame:
 
 
 def repair_misfiled(spark: SparkSession, root: str, tz_hours: int = 8) -> int:
-    """Rewrite misfiled rows into their correct partitions.
+    """Rewrite misfiled rows into their correct partitions; returns the
+    number of rows written (0: nothing misfiled, nothing written).
 
     Unlike the reference (append-only, leaves stale copies), this uses
     dynamic partition overwrite. The rewrite set is the union of source
@@ -131,6 +132,11 @@ def repair_misfiled(spark: SparkSession, root: str, tz_hours: int = 8) -> int:
     own full layout — misfiled rows move across hiveperiod *within* their
     other partition values, and the dynamic overwrite keys on the real
     partition tuple instead of leaving the epoch level's files behind.
+
+    Job shape: one audit collect (the bad partitions and target dates),
+    then one write whose single shuffle — on the corrected partition
+    columns — also serves both crash-twin aggregates; the written row
+    count and partition set are observed on the write itself.
     """
     pcols = table_partition_cols(spark, root) or PARTITION_COLS
     if "hiveperiod" not in pcols:
@@ -138,50 +144,47 @@ def repair_misfiled(spark: SparkSession, root: str, tz_hours: int = 8) -> int:
             f"repair_misfiled: lake at {root} has partition layout {pcols} "
             "without a hiveperiod level — nothing to repair by event date"
         )
-    other_cols = [c for c in pcols if c != "hiveperiod"]
     lake = spark.read.parquet(root)
     accurate = to_local(normalize_epoch_auto(F.col("heartbeat")), tz_hours).cast("date")
-    affected = (
-        lake.withColumn("accurate", accurate)
-        # null-safe misfiled predicate — see audit_misfiled
-        .filter(
-            ~F.col("hiveperiod").eqNullSafe(F.col("accurate"))
-            & F.col("accurate").isNotNull()
+    # The bad partitions come back as SPARK-cast strings, the domain the
+    # writer names directories in (see partition_values_set): a Python
+    # str() of the collected values formats bool/float/null differently,
+    # and the emptied-partition difference below would miss dirs.
+    moves = (
+        lake.filter(
+            # null-safe misfiled predicate — see audit_misfiled
+            ~F.col("hiveperiod").eqNullSafe(accurate) & accurate.isNotNull()
         )
         .select(
-            F.col("hiveperiod").alias("bad_period"),
-            *[F.col(c).alias(f"bad_{c}") for c in other_cols],
-            F.col("accurate").alias("target_period"),
+            *[F.col(c).cast("string").alias(c) for c in pcols],
+            accurate.cast("string").alias("_target"),
         )
         .distinct()
+        .collect()  # partition list: tiny, control plane
     )
-    moves = affected.collect()  # partition list: tiny, control plane
     if not moves:
         return 0
-
-    # bad_parts through the SAME Spark cast-to-string domain as out_parts
-    # (partition_values_set) — a parallel Python str() path would compare
-    # different string formats for bool/float/null partition values and
-    # the set difference would silently miss dirs to delete. The frame is
-    # rebuilt from the already-collected moves: control-plane rows, no
-    # second lake scan.
-    bad_src = spark.createDataFrame(moves, affected.schema).select(
-        F.col("bad_period").alias("hiveperiod"),
-        *[F.col(f"bad_{c}").alias(c) for c in other_cols],
-    )
-    bad_parts = partition_values_set(bad_src, pcols)
+    bad_parts = {tuple(r[c] for c in pcols) for r in moves}
     periods = sorted(
-        {str(r["bad_period"]) for r in moves if r["bad_period"] is not None}
-        | {str(r["target_period"]) for r in moves}
+        {r["hiveperiod"] for r in moves if r["hiveperiod"] is not None}
+        | {r["_target"] for r in moves}
     )
-    null_bad = any(r["bad_period"] is None for r in moves)
     in_scope = F.col("hiveperiod").isin(periods)
-    if null_bad:  # rows misfiled INTO the null partition are in scope too
+    if any(r["hiveperiod"] is None for r in moves):
+        # rows misfiled INTO the null partition are in scope too
         in_scope = in_scope | F.col("hiveperiod").isNull()
-    subset = lake.filter(in_scope)
+    data_cols = list(lake.columns)
     # Rows whose accurate date can't be computed (null heartbeat) keep
     # their current partition instead of migrating to the null partition.
-    fixed = subset.withColumn("hiveperiod", F.coalesce(accurate, F.col("hiveperiod")))
+    # The one shuffle is on the corrected partition columns: the crash-twin
+    # aggregates below group by supersets of them, so they and the write
+    # reuse it.
+    fixed = (
+        lake.filter(in_scope)
+        .withColumn("_origin", F.col("hiveperiod"))
+        .withColumn("hiveperiod", F.coalesce(accurate, F.col("hiveperiod")))
+        .repartition(*[F.col(c) for c in pcols])
+    )
     # CRASH IDEMPOTENCE: a crash between the overwrite commit and the
     # stale-dir delete below leaves a row's corrected copy in its target
     # partition AND its stale copy in the (not-yet-deleted) bad dir; a
@@ -191,7 +194,6 @@ def repair_misfiled(spark: SparkSession, root: str, tz_hours: int = 8) -> int:
     # (max(1,1) = 1 collapses them) while genuine duplicate rows share
     # one origin (max keeps their count). Needs groupable columns — a
     # map-typed lake falls back to the direct rewrite with a warning.
-    data_cols = list(lake.columns)
     if any("map<" in t for _, t in lake.dtypes):
         import warnings
 
@@ -201,37 +203,57 @@ def repair_misfiled(spark: SparkSession, root: str, tz_hours: int = 8) -> int:
             "rows",
             stacklevel=2,
         )
-        out = fixed
+        out = fixed.select(*data_cols)
     else:
-        origin = subset.withColumn("_origin", F.col("hiveperiod")).withColumn(
-            "hiveperiod", F.coalesce(accurate, F.col("hiveperiod"))
+        # Grouping normalizes float keys (-0.0 becomes 0.0): float and
+        # double columns are grouped on their exact string cast and cast
+        # back, so every value is written back bit for bit.
+        floats = {
+            c: t for c, t in lake.dtypes if t in ("float", "double") and c not in pcols
+        }
+        keyed = fixed.select(
+            *[F.col(c).cast("string").alias(c) if c in floats else c for c in data_cols],
+            "_origin",
         )
-        per_origin = origin.groupBy(*data_cols, "_origin").agg(
+        per_origin = keyed.groupBy(*data_cols, "_origin").agg(
             F.count(F.lit(1)).alias("_n")
         )
         mult = per_origin.groupBy(*data_cols).agg(F.max("_n").alias("_n"))
         out = mult.select(
-            *data_cols,
+            *[F.col(c).cast(floats[c]).alias(c) if c in floats else c for c in data_cols],
             F.explode(F.sequence(F.lit(1), F.col("_n"))).alias("_i"),
         ).drop("_i")
-    out = out.persist()  # feeds bookkeeping collect + count + write
-    try:
-        out_parts = partition_values_set(out, pcols)
-        n = out.count()
-        (
-            out.repartition(*[F.col(c) for c in pcols])
-            .write.mode("overwrite")
-            # writer-level dynamic overwrite: mutating the session conf
-            # would silently change every later overwrite in the session
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", "snappy")
-            .partitionBy(*pcols)
-            .parquet(root)
-        )
-    finally:
-        out.unpersist()
+    n, out_parts = overwrite_partitions(out, root, pcols)
     _delete_partition_dirs(spark, root, pcols, bad_parts - out_parts)
     return n
+
+
+def overwrite_partitions(df: DataFrame, root: str, pcols) -> tuple[int, set[tuple]]:
+    """Write ``df`` into the lake at ``root`` partitioned by ``pcols`` with
+    dynamic partition overwrite, and return the rows written and the
+    partition tuples written (Spark-cast strings, None preserved — see
+    ``partition_values_set``). Both are observed on the write job itself,
+    so the bookkeeping costs no job and no cache of ``df``.
+
+    The overwrite mode is a writer option: mutating the session conf would
+    silently change every later overwrite in the session."""
+    obs = Observation()
+    (
+        df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set(
+                F.struct(*[F.col(c).cast("string").alias(c) for c in pcols])
+            ).alias("parts"),
+        )
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("compression", "snappy")
+        .partitionBy(*pcols)
+        .parquet(root)
+    )
+    m = obs.get
+    return m["n"], {tuple(p) for p in m["parts"]}
 
 
 def table_partition_cols(spark: SparkSession, root: str) -> tuple[str, ...]:
@@ -241,22 +263,35 @@ def table_partition_cols(spark: SparkSession, root: str) -> tuple[str, ...]:
     and epoch-partitioned streaming targets (``write_epoch_batch`` writes
     ``ingest_epoch=…/hiveperiod=…/dstrct_code=…``) instead of silently
     rewriting a mixed layout (round-2 advice)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(root)
-    fs = p.getFileSystem(conf)
+    fs, p, hidden = _lake_fs(spark, root)
     cols: list[str] = []
-    while True:
-        nxt = None
-        for status in fs.listStatus(p):
-            name = status.getPath().getName()
-            if status.isDirectory() and "=" in name and not name.startswith("_"):
-                nxt = (name.split("=", 1)[0], status.getPath())
+    while sub := _partition_dirs(fs, p, hidden, first=True):
+        p = sub[0]
+        cols.append(p.getName().split("=", 1)[0])
+    return tuple(cols)
+
+
+def _lake_fs(spark: SparkSession, root: str):
+    """``(FileSystem, Path, hidden-name filter)`` for walking the lake at
+    ``root`` through the Hadoop FileSystem API. The filter is Parquet's
+    ``HiddenFileFilter``: names starting with ``_`` or ``.``
+    (``_SUCCESS``, ``_temporary``, ``.crc`` checksums) are not data."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(root)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, p, jvm.org.apache.parquet.hadoop.util.HiddenFileFilter.INSTANCE
+
+
+def _partition_dirs(fs, path, hidden, first: bool = False) -> list:
+    """The visible ``col=value`` subdirectories of ``path`` as Hadoop
+    Paths; with ``first``, stop at the first one."""
+    dirs = []
+    for st in fs.listStatus(path, hidden):
+        if st.isDirectory() and "=" in st.getPath().getName():
+            dirs.append(st.getPath())
+            if first:
                 break
-        if nxt is None:
-            return tuple(cols)
-        cols.append(nxt[0])
-        p = nxt[1]
+    return dirs
 
 
 def partition_values_set(df, pcols) -> set[tuple]:
@@ -290,9 +325,7 @@ def _delete_partition_dirs(spark: SparkSession, root: str, pcols, parts) -> None
         return
     jvm = spark.sparkContext._jvm
     cat = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root_path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = root_path.getFileSystem(conf)
+    fs, root_path, _ = _lake_fs(spark, root)
     # Qualified-Path equality, not string comparison: a scheme-qualified
     # or unnormalized root ('file:///x', '/x//y') never string-matches
     # Path.toString(), and the prune would climb past — and delete — the
@@ -315,12 +348,22 @@ def _delete_partition_dirs(spark: SparkSession, root: str, pcols, parts) -> None
             parent = parent.getParent()
 
 
-def compact_partitions(spark: SparkSession, root: str, target_files: int = 1) -> None:
+def compact_partitions(spark: SparkSession, root: str, target_files: int = 1) -> int:
     """Daily small-file compaction (the reference's TODO stub): rewrite
-    each partition into ~``target_files`` files, dynamic overwrite. The
-    partition layout is derived from the table, so epoch-partitioned
-    streaming targets compact under their own full layout instead of
-    collapsing the epoch level into duplicated rows (round-2 advice).
+    each leaf partition holding more than ``target_files`` data files into
+    ~``target_files`` files, dynamic overwrite. Returns the number of leaf
+    partitions rewritten; leaves that are already compact are neither read
+    nor rewritten, so a compact lake costs a directory listing and no
+    Spark job. The partition layout is derived from the table, so
+    epoch-partitioned streaming targets compact under their own full
+    layout instead of collapsing the epoch level into duplicated rows
+    (round-2 advice).
+
+    The fragmented leaves are read under ``basePath`` with the whole
+    lake's schema, so their partition values keep the types a full-lake
+    read infers: read alone, a leaf ``dstrct_code=01`` whose siblings
+    make the column a string would infer as the integer 1 and be written
+    back as ``dstrct_code=1`` beside its stale files.
 
     Shuffle shape: repartition on (partition cols, content-hash salt
     mod target_files) — each partition fans out to ~``target_files``
@@ -330,18 +373,27 @@ def compact_partitions(spark: SparkSession, root: str, target_files: int = 1) ->
     the entire lake serially, and the per-partition file count never
     followed the knob at all.)"""
     pcols = table_partition_cols(spark, root) or PARTITION_COLS
-    lake = spark.read.parquet(root)
+    target_files = max(1, int(target_files))
+    fs, root_path, hidden = _lake_fs(spark, root)
+    level = [root_path]
+    for _ in pcols:
+        level = [d for p in level for d in _partition_dirs(fs, p, hidden)]
+    # A leaf holds only data files: its visible entries are counted in
+    # one listing call, without a call per file.
+    leaves = [p.toString() for p in level if len(fs.listStatus(p, hidden)) > target_files]
+    if not leaves:
+        return 0
+    schema = spark.read.parquet(root).schema
+    part = spark.read.schema(schema).option("basePath", root).parquet(*leaves)
     salt = F.pmod(
-        F.xxhash64(F.struct(*[F.col(c) for c in lake.columns])),
-        F.lit(max(1, int(target_files))),
+        F.xxhash64(F.struct(*[F.col(c) for c in part.columns])),
+        F.lit(target_files),
     )
-    (
-        lake.withColumn("_salt", salt)
+    overwrite_partitions(
+        part.withColumn("_salt", salt)
         .repartition(*[F.col(c) for c in pcols], F.col("_salt"))
-        .drop("_salt")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "snappy")
-        .partitionBy(*pcols)
-        .parquet(root)
+        .drop("_salt"),
+        root,
+        pcols,
     )
+    return len(leaves)

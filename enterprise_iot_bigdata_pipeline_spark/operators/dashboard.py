@@ -31,44 +31,50 @@ def speed_analysis(
     dstrct_code: str,
     units: list[str] | None = None,
     hour_range: tuple[int, int] = (0, 23),
-    tz_hours: int = 8,
 ) -> DataFrame:
-    """Per-unit 1-minute resample of speed/error/status metrics.
+    """Per-unit 1-minute resample of speed/error/status metrics, ordered
+    by (minute, unitno).
 
     Mirrors the dashboard pipeline: partition filters (pruning), unit
     IN-list, derived-local-hour BETWEEN, sentinel cleanup, gpsstatus,
     error_rate, tumbling 1-minute window with mean/min aggregates.
+
+    Plan shape: one filter and one aggregate (the cleaning expressions
+    live inside the aggregate). With a unit list the output is at most
+    minutes × listed units rows, so it is coalesced to one partition and
+    sorted there: a global ``orderBy`` would add a range-partition
+    sampling job and a second exchange to every picker query, and the
+    partial aggregate stays parallel. A whole-district query (no unit
+    list) keeps the global ``orderBy``: its output grows with the fleet,
+    and under a ``limit`` (``show``) Spark plans it as a parallel top-k.
     """
-    df = lake.filter(
+    pred = (
         (F.col("hiveperiod") == F.lit(hiveperiod))
         & (F.col("dstrct_code") == dstrct_code)
+        & F.hour(F.col("datetime_wita")).between(*hour_range)
     )
     if units:
-        df = df.filter(F.col("unitno").isin(units))
-    local_hour = F.hour(F.col("datetime_wita"))
-    df = df.filter(local_hour.between(*hour_range))
-
-    cleaned = (
-        df.withColumn("gpsspeed", replace_sentinel(F.col("gpsspeed")))
-        .withColumn("VehicleSpeed", replace_sentinel(F.col("VehicleSpeed")))
-        .withColumn("gpsstatus", gps_status(F.col("gpslat")))
-        .withColumn("error_rate", error_rate(F.col("gpsspeed"), F.col("VehicleSpeed")))
-    )
-    return (
-        cleaned.groupBy(
+        pred = pred & F.col("unitno").isin(units)
+    gpsspeed = replace_sentinel(F.col("gpsspeed"))
+    vehicle_speed = replace_sentinel(F.col("VehicleSpeed"))
+    out = (
+        lake.filter(pred)
+        .groupBy(
             F.window(F.col("datetime_wita"), "1 minute")["start"].alias("minute"),
             "unitno",
             "dstrct_code",
         )
         .agg(
-            F.avg("gpsspeed").alias("gpsspeed"),
-            F.avg("VehicleSpeed").alias("VehicleSpeed"),
-            F.avg("error_rate").alias("error_rate"),
-            F.min("gpsstatus").alias("gpsstatus"),
+            F.avg(gpsspeed).alias("gpsspeed"),
+            F.avg(vehicle_speed).alias("VehicleSpeed"),
+            F.avg(error_rate(gpsspeed, vehicle_speed)).alias("error_rate"),
+            F.min(gps_status(F.col("gpslat"))).alias("gpsstatus"),
             F.count(F.lit(1)).alias("n_rows"),
         )
-        .orderBy("minute", "unitno")
     )
+    if units:
+        return out.coalesce(1).sortWithinPartitions("minute", "unitno")
+    return out.orderBy("minute", "unitno")
 
 
 def fill_gaps(

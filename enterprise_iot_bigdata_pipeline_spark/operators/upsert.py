@@ -19,6 +19,12 @@ from enterprise_iot_bigdata_pipeline_spark.operators.commitlog import (
     overwrite_atomic,
     recover_swap,
 )
+from enterprise_iot_bigdata_pipeline_spark.operators.compaction import (
+    _delete_partition_dirs,
+    overwrite_partitions,
+    partition_values_set,
+    table_partition_cols,
+)
 
 
 def merge_upsert(target: DataFrame, updates: DataFrame, key: str | list[str]) -> DataFrame:
@@ -80,10 +86,6 @@ def merge_into_lake(
         # layout: a subset/superset/reordering makes the dynamic
         # overwrite write a second conflicting directory tree (bricking
         # the table) or replace whole subtrees with flat files.
-        from enterprise_iot_bigdata_pipeline_spark.operators.compaction import (
-            table_partition_cols,
-        )
-
         actual = table_partition_cols(spark, root)
         if actual and tuple(partition_cols) != actual:
             raise ValueError(
@@ -110,37 +112,17 @@ def merge_into_lake(
         for c in pcols:
             eq = merged[c].eqNullSafe(aff[c])
             cond = eq if cond is None else cond & eq
-        # persist: the subset plan (full-lake anti-join) feeds THREE
-        # actions below (two bookkeeping collects + the write) — without
-        # it the merge re-reads the lake three times
-        subset = merged.join(F.broadcast(aff), cond, "left_semi").persist()
-        # Partition bookkeeping BEFORE the write — afterwards these frames
-        # would re-read the just-overwritten lake (self-referential plans).
-        from enterprise_iot_bigdata_pipeline_spark.operators.compaction import (
-            partition_values_set,
-        )
-
+        subset = merged.join(F.broadcast(aff), cond, "left_semi")
+        # Affected partitions BEFORE the write — afterwards this frame
+        # would re-read the just-overwritten lake (self-referential plan).
+        # The written row count and partitions are observed on the write.
         affected_set = partition_values_set(affected, pcols)
-        written_set = partition_values_set(subset, pcols)
-        n = subset.count()
-        (
-            subset.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            # writer-level option, NOT session conf: mutating the session
-            # would silently flip every later partitioned overwrite in
-            # the session to dynamic semantics (stale-partition survival)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(root)
+        n, written_set = overwrite_partitions(
+            subset.repartition(*[F.col(c) for c in pcols]), root, pcols
         )
-        subset.unpersist()
         # Dynamic overwrite only replaces partitions PRESENT in the output:
         # a source partition left with zero rows (every resident key moved
         # away) must be deleted explicitly or its stale files survive.
-        from enterprise_iot_bigdata_pipeline_spark.operators.compaction import (
-            _delete_partition_dirs,
-        )
-
         _delete_partition_dirs(spark, root, pcols, affected_set - written_set)
         return n
     # Whole-table rewrite: temp-dir write + atomic rename swap. The write

@@ -27,6 +27,22 @@ def spark(tmp_path_factory):
     s.stop()
 
 
+def count_jobs(spark, fn):
+    """Run ``fn()`` and return ``(its result, the number of Spark jobs it
+    ran)``. Jobs are those the status tracker files under this thread's
+    job group, read before and after once the listener bus has drained."""
+    sc = spark.sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+
+    before = job_ids()
+    result = fn()
+    return result, len(job_ids() - before)
+
+
 @pytest.fixture(scope="session")
 def registry_gate(spark):
     """One walk of the registry under the plan lints and the vacuity check

@@ -11,6 +11,8 @@ from datetime import datetime, timezone
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import count_jobs
+
 
 def _write_ndjson(path, rows, gz=True):
     data = "\n".join(json.dumps(r) for r in rows)
@@ -251,8 +253,11 @@ def test_maintenance_on_epoch_partitioned_lake(spark, tmp_path):
     assert glob.glob(f"{root}/ingest_epoch=0/hiveperiod=*/dstrct_code=*") != []
 
     # repair moves the misfiled row across hiveperiod WITHIN its epoch
-    n = repair_misfiled(spark, root)
+    n, jobs = count_jobs(spark, lambda: repair_misfiled(spark, root))
     assert n >= 1
+    # schema inference, the audit collect (map stage + result), the write
+    # (one shuffle + the write job)
+    assert jobs <= 5
     fixed = spark.read.parquet(root)
     assert audit_misfiled(fixed).count() == 0
     assert fixed.count() == 3
@@ -261,6 +266,116 @@ def test_maintenance_on_epoch_partitioned_lake(spark, tmp_path):
     # epoch-1 partition untouched
     ok_e1 = fixed.filter(F.col("unitno") == "ok-e1").collect()[0]
     assert str(ok_e1["hiveperiod"]) == "2024-03-01" and ok_e1["ingest_epoch"] == 1
+
+
+def test_repair_misfiled_preserves_sign_of_zero(spark, tmp_path):
+    """Spark normalizes float grouping keys (-0.0 becomes 0.0); the
+    crash-twin aggregates must still write every zero back with its sign,
+    on moved rows and on the target partition's resident rows alike."""
+    import math
+
+    from enterprise_iot_bigdata_pipeline_spark.operators.compaction import (
+        audit_misfiled,
+        repair_misfiled,
+    )
+
+    root = str(tmp_path / "lake")
+    hb_mar2_early = int(datetime(2024, 3, 1, 22, 0, 0, tzinfo=timezone.utc).timestamp())  # → Mar 2
+    hb_mar2 = int(datetime(2024, 3, 2, 2, 0, 0, tzinfo=timezone.utc).timestamp())
+    df = spark.createDataFrame(
+        [
+            (hb_mar2_early, "moved", -0.0, -0.0, "2024-03-01"),
+            (hb_mar2, "resident", -0.0, 0.0, "2024-03-02"),
+            (hb_mar2, "positive", 0.0, -0.0, "2024-03-02"),
+            # equal under float comparison, yet two distinct rows:
+            (hb_mar2, "pair", -0.0, 1.0, "2024-03-02"),
+            (hb_mar2, "pair", 0.0, 1.0, "2024-03-02"),
+        ],
+        "heartbeat long, unitno string, speed double, temp float, hiveperiod string",
+    ).withColumn("hiveperiod", F.col("hiveperiod").cast("date")).withColumn(
+        "dstrct_code", F.lit("D")
+    )
+    df.write.partitionBy("hiveperiod", "dstrct_code").parquet(root)
+
+    assert repair_misfiled(spark, root) == 5
+    after = spark.read.parquet(root)
+    assert audit_misfiled(after).count() == 0
+    signs = sorted(
+        (r["unitno"], math.copysign(1, r["speed"]), math.copysign(1, r["temp"]))
+        for r in after.collect()
+    )
+    assert signs == [
+        ("moved", -1, -1),
+        ("pair", -1, 1),
+        ("pair", 1, 1),
+        ("positive", 1, -1),
+        ("resident", -1, 1),
+    ]
+
+
+def _file_bytes(root):
+    from pathlib import Path
+
+    return {p: p.read_bytes() for p in Path(root).rglob("*.parquet")}
+
+
+def test_compact_partitions_skips_compact_lake(spark, tmp_path):
+    """A lake whose partitions already hold one file each costs no Spark
+    job and keeps every file byte for byte."""
+    from enterprise_iot_bigdata_pipeline_spark.operators.compaction import (
+        compact_partitions,
+    )
+
+    root = str(tmp_path / "lake")
+    spark.range(600).select(
+        F.col("id").alias("heartbeat"),
+        (F.lit("2024-03-01").cast("date") + (F.col("id") % 3).cast("int")).alias("hiveperiod"),
+        (F.col("id") % 2).cast("string").alias("dstrct_code"),
+    ).repartition("hiveperiod", "dstrct_code").write.partitionBy(
+        "hiveperiod", "dstrct_code"
+    ).parquet(root)
+    before = _file_bytes(root)
+    assert len(before) == 6
+
+    rewritten, jobs = count_jobs(spark, lambda: compact_partitions(spark, root))
+    assert (rewritten, jobs) == (0, 0)
+    assert _file_bytes(root) == before
+
+
+def test_compact_partitions_rewrites_only_fragmented_partition(spark, tmp_path):
+    """Only the leaf with more files than the target is read and
+    rewritten, and it keeps the partition types of the whole lake: read
+    alone, ``dstrct_code=01`` would infer as the integer 1 and be written
+    back as ``dstrct_code=1``."""
+    import glob
+
+    from enterprise_iot_bigdata_pipeline_spark.operators.compaction import (
+        compact_partitions,
+    )
+
+    root = str(tmp_path / "lake")
+    rows = spark.range(1000).select(
+        F.col("id").alias("heartbeat"),
+        F.lit("2024-03-01").cast("date").alias("hiveperiod"),
+    )
+    rows.filter(F.col("id") < 500).withColumn("dstrct_code", F.lit("A")).coalesce(
+        1
+    ).write.partitionBy("hiveperiod", "dstrct_code").parquet(root)
+    rows.filter(F.col("id") >= 500).withColumn("dstrct_code", F.lit("01")).repartition(
+        4
+    ).write.mode("append").partitionBy("hiveperiod", "dstrct_code").parquet(root)
+    compact_leaf = f"{root}/hiveperiod=2024-03-01/dstrct_code=A"
+    fragmented = f"{root}/hiveperiod=2024-03-01/dstrct_code=01"
+    kept = _file_bytes(compact_leaf)
+    assert len(kept) == 1 and len(glob.glob(f"{fragmented}/*.parquet")) == 4
+
+    assert compact_partitions(spark, root) == 1
+    assert _file_bytes(compact_leaf) == kept
+    assert len(glob.glob(f"{fragmented}/*.parquet")) == 1
+    lake = spark.read.parquet(root)
+    assert sorted(r["heartbeat"] for r in lake.collect()) == list(range(1000))
+    assert lake.filter(F.col("dstrct_code") == "01").count() == 500
+    assert sorted(glob.glob(f"{root}/hiveperiod=2024-03-01/*")) == [fragmented, compact_leaf]
 
 
 def test_compact_partitions_single_file(spark, tmp_path):
