@@ -118,7 +118,16 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             available_now=not args.hourly,
         )
         q.awaitTermination()
-        print("stream drained" if not args.hourly else "stream stopped")
+        # From the query's own progress reports (the last
+        # spark.sql.streaming.numRecentProgressUpdates triggers), so no job.
+        # numInputRows counts every source row the sink's actions read:
+        # the empty-batch probe's row is on top of the rows written.
+        rows = [p.numInputRows for p in q.recentProgress]
+        print(
+            f"drained {sum(1 for n in rows if n)} batches, {sum(rows)} input rows read"
+            if not args.hourly
+            else "stream stopped"
+        )
     elif args.cmd == "audit":
         from enterprise_iot_bigdata_pipeline_spark.operators.compaction import audit_misfiled
 

@@ -71,18 +71,15 @@ def compact_batch(
             stacklevel=2,
         )
         return 0
-    # persist: the count and the write must not each re-gunzip and
-    # re-parse every input file (micro-batches are bounded by
-    # maxFilesPerTrigger, so caching one batch is cheap)
-    df = enrich(raw, distrik).persist()
-    try:
-        n = df.count()
-        if n == 0:
-            return 0
-        write_lake(df, target)
-    finally:
-        df.unpersist()
-    return n
+    # a one-task probe keeps an empty batch from creating the target; the
+    # row count is observed on the append itself, so nothing is cached and
+    # only the append parses the whole input
+    df = enrich(raw, distrik)
+    if not df.take(1):
+        return 0
+    obs = Observation()
+    write_lake(df.observe(obs, F.count(F.lit(1)).alias("n")), target)
+    return obs.get["n"]
 
 
 def audit_misfiled(lake: DataFrame, tz_hours: int = 8) -> DataFrame:

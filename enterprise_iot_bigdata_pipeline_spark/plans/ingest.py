@@ -543,13 +543,10 @@ def streaming_sink_parquet_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("dstrct_code", F.lit("D1"))
         )
 
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            if batch_df.isEmpty():  # T5 skip-on-empty
-                return
-            write_epoch_batch(batch_df, target, epoch_id)
-
         q = (
-            enriched.writeStream.foreachBatch(sink)
+            enriched.writeStream.foreachBatch(
+                lambda batch_df, epoch_id: write_epoch_batch(batch_df, target, epoch_id)
+            )
             .option("checkpointLocation", os.path.join(work, "ckpt"))
             .trigger(availableNow=True)
             .start()

@@ -135,6 +135,14 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Right-size shuffles for the target, let AQE coalesce at runtime.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # File listing past 32 paths (parallelPartitionDiscovery.threshold)
+        # runs as a Spark job whose default parallelism of 10000 means one
+        # task per path, each deserializing the Hadoop conf; a streaming
+        # drain lists its glob three times (partition inference, the
+        # availableNow file fetch, the batch's file index). Size the
+        # listing job to the cores instead. The threshold stays: listing
+        # serially on the driver would regress object-store landing dirs.
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -14,7 +14,8 @@ primitives:
   TOP 1000-2000 keys/run  → maxFilesPerTrigger (batch-size throttling)
   hourly sleep loop (T1)  → trigger(processingTime="1 hour")
   BOOST backlog drain (T7)→ trigger(availableNow=True)
-  skip-on-empty (T5)      → empty micro-batches are free
+  skip-on-empty (T5)      → an empty micro-batch costs one 1-task probe
+                            job and writes nothing
   misfiled-data repair(T4)→ event-time partitioning at ingest (+ optional
                             watermark for the windowed aggregation path)
 """
@@ -38,7 +39,14 @@ def write_epoch_batch(batch_df: DataFrame, target: str, epoch_id: int) -> None:
     exactly its own partitions instead of appending duplicates. Event-time
     partitions stay at the second level — pruning on ``hiveperiod`` still
     works — and ``ingest_epoch`` doubles as per-row batch lineage.
+
+    An empty batch writes nothing and does not create ``target`` (T5
+    skip-on-empty). The probe is ``take(1)``, which scans partitions
+    incrementally in one task; ``isEmpty()`` would run a limit shuffle
+    with one map task per scan partition.
     """
+    if not batch_df.take(1):
+        return
     (
         batch_df.withColumn("ingest_epoch", F.lit(int(epoch_id)))
         .repartition(*[F.col(c) for c in PARTITION_COLS])
@@ -75,14 +83,9 @@ def stream_compact(
     )
     enriched = enrich(raw.withColumn("source_file", F.input_file_name()), distrik)
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():  # T5 skip-on-empty
-            return
-        write_epoch_batch(batch_df, target, epoch_id)
-
-    writer = enriched.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
+    writer = enriched.writeStream.foreachBatch(
+        lambda batch_df, epoch_id: write_epoch_batch(batch_df, target, epoch_id)
+    ).option("checkpointLocation", checkpoint)
     if available_now:
         writer = writer.trigger(availableNow=True)
     else:

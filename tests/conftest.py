@@ -27,20 +27,36 @@ def spark(tmp_path_factory):
     s.stop()
 
 
+def job_tasks(spark, fn, groups=lambda result: ()):
+    """Run ``fn()`` and return ``(its result, [(description, tasks)])``
+    with one entry per Spark job it ran, in job-id order: the jobs filed
+    under this thread's job group, plus those under the groups that
+    ``groups(result)`` names (a streaming query runs its jobs under its
+    ``runId``). ``tasks`` counts the tasks the job ran (skipped stages
+    excluded); the listener bus is drained before each read."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def job_ids(names):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return {j for g in names for j in sc.statusTracker().getJobIdsForGroup(g)}
+
+    mine = [sc.getLocalProperty("spark.jobGroup.id")]
+    before = job_ids(mine)
+    result = fn()
+    out = []
+    for jid in sorted(job_ids([*mine, *groups(result)]) - before):
+        j = store.job(jid)
+        desc = j.description().get() if j.description().isDefined() else j.name()
+        out.append((desc, j.numCompletedTasks()))
+    return result, out
+
+
 def count_jobs(spark, fn):
     """Run ``fn()`` and return ``(its result, the number of Spark jobs it
-    ran)``. Jobs are those the status tracker files under this thread's
-    job group, read before and after once the listener bus has drained."""
-    sc = spark.sparkContext
-    group = sc.getLocalProperty("spark.jobGroup.id")
-
-    def job_ids():
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return set(sc.statusTracker().getJobIdsForGroup(group))
-
-    before = job_ids()
-    result = fn()
-    return result, len(job_ids() - before)
+    ran under this thread's job group)``."""
+    result, jobs = job_tasks(spark, fn)
+    return result, len(jobs)
 
 
 @pytest.fixture(scope="session")

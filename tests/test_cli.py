@@ -73,6 +73,27 @@ def test_cli_full_workflow(spark, tmp_path, capsys):
     assert "-3329" not in out
 
 
+def test_cli_ingest_stream_reports_drain(spark, tmp_path, capsys):
+    """``ingest-stream`` prints the non-empty batches and the input rows
+    its sink read, taken from the query's progress reports."""
+    src = tmp_path / "landing"
+    src.mkdir()
+    hb = int(datetime(2024, 3, 1, 9, 0, 0, tzinfo=timezone.utc).timestamp())
+    _gz(src / "2024030109.txt.gz", [{"heartbeat": hb + i, "unitno": "LD772"} for i in range(6)])
+    args = [
+        "ingest-stream", "--source", str(src), "--target", str(tmp_path / "lake"),
+        "--checkpoint", str(tmp_path / "ckpt"), "--district", "DISTRICTB",
+        "--schema", "heartbeat long, unitno string",
+    ]
+    assert main(args, spark) == 0
+    # 6 rows written plus the one row the empty-batch probe read
+    assert "drained 1 batches, 7 input rows read" in capsys.readouterr().out
+    assert spark.read.parquet(str(tmp_path / "lake")).count() == 6
+
+    assert main(args, spark) == 0  # same checkpoint: nothing new
+    assert "drained 0 batches, 0 input rows read" in capsys.readouterr().out
+
+
 def test_dashboard_operator_semantics(spark, tmp_path):
     """Sentinel/status semantics on a hand-built lake frame; output order
     and values against a pandas reference."""

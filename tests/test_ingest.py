@@ -11,7 +11,7 @@ from datetime import datetime, timezone
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import count_jobs
+from tests.conftest import count_jobs, job_tasks
 
 
 def _write_ndjson(path, rows, gz=True):
@@ -429,6 +429,78 @@ def test_stream_compact_exactly_once(spark, landing, tmp_path):
     q3 = stream_compact(spark, str(landing / "dev1"), target, ckpt, schema, "DISTRICTB")
     q3.awaitTermination()
     assert spark.read.parquet(target).count() == first + 1
+
+
+def test_stream_compact_empty_batch_writes_nothing(spark, tmp_path):
+    """A landing dir whose only file is an empty gzip drains as one batch
+    of zero rows and leaves the target absent; after a real file lands,
+    a drain on the same checkpoint writes only that file's rows."""
+    import os
+
+    from enterprise_iot_bigdata_pipeline_spark.streaming.ingest import stream_compact
+
+    src, target, ckpt = tmp_path / "in", str(tmp_path / "slake"), str(tmp_path / "ckpt")
+    src.mkdir()
+    _write_ndjson(src / "2024030110.txt.gz", [])
+    schema = "heartbeat long, unitno string, gpsspeed double"
+
+    def drain():
+        q = stream_compact(spark, str(src), target, ckpt, schema, "DISTRICTB")
+        q.awaitTermination()
+        return q
+
+    progress = [p for p in drain().recentProgress if p.batchId == 0]
+    assert len(progress) == 1 and progress[0].numInputRows == 0
+    assert not os.path.exists(target)
+
+    hb = int(datetime(2024, 3, 1, 12, 0, 0, tzinfo=timezone.utc).timestamp())
+    _write_ndjson(
+        src / "2024030112.txt.gz",
+        [{"heartbeat": hb + i, "unitno": "LD772", "gpsspeed": 1.0} for i in range(3)],
+    )
+    drain()
+    lake = spark.read.parquet(target)
+    assert lake.count() == 3
+    assert {r[0] for r in lake.select("source_file").distinct().collect()} == {
+        (src / "2024030112.txt.gz").as_uri()
+    }
+    assert {r[0] for r in lake.select("ingest_epoch").distinct().collect()} == {1}
+
+
+def test_stream_compact_drain_task_budget(spark, tmp_path):
+    """A drain of more than 32 device directories (Spark's parallel-listing
+    threshold) runs listing jobs of at most one task per core and a
+    one-task empty-batch probe; every other job is the write's."""
+    import os
+
+    from enterprise_iot_bigdata_pipeline_spark.streaming.ingest import stream_compact
+
+    base = int(datetime(2024, 3, 1, 10, 0, 0, tzinfo=timezone.utc).timestamp())
+    for d in range(40):
+        dev = tmp_path / "landing" / f"dev{d:02d}"
+        dev.mkdir(parents=True)
+        _write_ndjson(
+            dev / "2024030110.txt.gz",
+            [{"heartbeat": base + i, "unitno": f"U{d}", "gpsspeed": 1.0} for i in range(3)],
+        )
+
+    def drain():
+        q = stream_compact(
+            spark, str(tmp_path / "landing" / "*"), str(tmp_path / "slake"),
+            str(tmp_path / "ckpt"), "heartbeat long, unitno string, gpsspeed double",
+            "DISTRICTB",
+        )
+        q.awaitTermination()
+        return q
+
+    _, jobs = job_tasks(spark, drain, lambda q: [str(q.runId)])
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))  # as get_spark sizes it
+    listing = [n for desc, n in jobs if desc.startswith("Listing leaf files")]
+    batch = [n for desc, n in jobs if not desc.startswith("Listing leaf files")]
+    assert listing and max(listing) <= cpus, jobs
+    # batch 0 runs the probe, then the write's shuffle-map and write jobs
+    assert len(batch) == 3 and batch[0] == 1, jobs
+    assert spark.read.parquet(str(tmp_path / "slake")).count() == 120
 
 
 def test_write_epoch_batch_replay_is_idempotent(spark, tmp_path):
