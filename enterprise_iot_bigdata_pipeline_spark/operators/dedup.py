@@ -150,85 +150,6 @@ def _pairs_of_sorted(sorted_docs: "F.Column") -> "F.Column":
 
 DEFAULT_MAX_BUCKET = 1024
 
-# connected_components sizes its iterate-frame hash partitioning from the
-# actual edge count (see there): one partition per this many edge rows,
-# capped at the session's shuffle-partition count. ~2M narrow long-pair
-# rows is well under 100 MB a partition — the guide's reduce-partition
-# sizing band — while keeping a few-hundred-edge graph on ONE task.
-_CC_ROWS_PER_PART = 2_000_000
-
-
-def _arrow_int_type(spark_simple: str):
-    """pyarrow integer type for a Spark integral simpleString (the id
-    types connected_components/k-core accept)."""
-    import pyarrow as pa
-
-    return {
-        "tinyint": pa.int8(),
-        "smallint": pa.int16(),
-        "int": pa.int32(),
-        "bigint": pa.int64(),
-    }[spark_simple]
-
-
-def _cc_local_kernel_factory(id_type: str):
-    """Single-task min-label connected components over a directed edge list
-    that fits ONE partition: the same Shiloach–Vishkin algebra as the
-    distributed loop below (hook every node to the minimum neighbor label,
-    then pointer-jump ``label ← label[label]`` to fixpoint), vectorized
-    over numpy index arrays instead of spread across per-round Spark jobs.
-    The fixpoint is identical by construction — label(v) = min doc id
-    reachable from v — so the output matches the distributed path row for
-    row. Used only when the measured edge count says the whole graph would
-    run on one task anyway (see connected_components). ``id_type`` is the
-    edge frame's Spark id type (the declared output schema must be honored
-    even when an EMPTY partition delivers no input batch to infer from)."""
-
-    def _kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        out_type = _arrow_int_type(id_type)
-        srcs, dsts = [], []
-        for b in batches:
-            srcs.append(b.column(0).to_numpy(zero_copy_only=False))
-            dsts.append(b.column(1).to_numpy(zero_copy_only=False))
-        if srcs:
-            u = np.concatenate(srcs).astype(np.int64, copy=False)
-            v = np.concatenate(dsts).astype(np.int64, copy=False)
-        else:
-            u = v = np.empty(0, dtype=np.int64)
-        if u.size == 0:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([], type=out_type), pa.array([], type=out_type)],
-                names=["doc", "component"],
-            )
-            return
-        nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-        iu, iv = inv[: u.size], inv[u.size :]
-        # labels are node INDICES; np.unique sorts ascending, so the
-        # minimum index is the minimum doc id — exactly the survivor rule.
-        lab = np.arange(nodes.size, dtype=np.int64)
-        while True:
-            prev = lab
-            new = lab.copy()
-            np.minimum.at(new, iu, lab[iv])
-            np.minimum.at(new, iv, lab[iu])
-            lab = new
-            while True:  # pointer-jump path compression to fixpoint
-                nl = lab[lab]
-                if np.array_equal(nl, lab):
-                    break
-                lab = nl
-            if np.array_equal(lab, prev):
-                break
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(nodes).cast(out_type), pa.array(nodes[lab]).cast(out_type)],
-            names=["doc", "component"],
-        )
-
-    return _kernel
-
 
 def bucket_pairs_capped(
     bucketed: DataFrame, bucket_cols: list[str], max_bucket: int = DEFAULT_MAX_BUCKET
@@ -578,6 +499,12 @@ def incremental_minhash_dedup(
     Recall/precision note: band-collision ⇒ drop is the high-recall
     policy (standard for crawl dedup); pair verification only applies
     within the batch. Tune with (k, bands) as usual.
+
+    Lifetime: with ``epoch_id`` given (a replayed epoch too), the returned
+    frame is a lazy semi-join that reads the COMMITTED index at
+    ``index_path``. Consume it before the next ``overwrite_atomic`` on
+    ``index_path`` (the next epoch's call): that swap deletes the files it
+    reads. Without ``epoch_id`` the kept set is checkpointed instead.
     """
     from enterprise_iot_bigdata_pipeline_spark.operators.commitlog import (
         committed_epoch,
@@ -800,6 +727,117 @@ def _leaf_target(ck_dir: str | None, master: str | None) -> tuple[str, str]:
     )
 
 
+# The small-graph fixpoints size their distributed loop from the actual
+# edge count: one partition per this many edge rows, capped at the
+# session's shuffle-partition count. ~2M narrow id-pair rows is well under
+# 100 MB a partition — the guide's reduce-partition sizing band — while
+# keeping a few-hundred-edge graph on ONE task.
+_CC_ROWS_PER_PART = 2_000_000
+
+# Spark id types the one-task edge kernel accepts → their pyarrow alias.
+_ARROW_INT_IDS = {"tinyint": "int8", "smallint": "int16", "int": "int32", "bigint": "int64"}
+
+
+def _small_graph_fixpoint(
+    edges: DataFrame,
+    names: tuple[str, str],
+    solve,
+    distributed,
+    local_max_edges: int | None = None,
+) -> DataFrame:
+    """Measured-size dispatch shared by the iterate-to-fixpoint graph
+    operators (``connected_components``, the k-core peel in plans/graph).
+
+    ``edges`` is a two-column id-pair frame, both columns of one id type.
+    It is staged once as a ``_ckpt_leaf`` with its row count observed on
+    that checkpoint job (r13 §1.5: ``CollectMetrics`` runs inside the
+    materialization pass, so the count costs no probe job). Then:
+
+    - the whole graph fits one partition (``n_edges <= local_max_edges``,
+      default ``_CC_ROWS_PER_PART`` — the sizing under which every round
+      of the distributed loop would already run as 1-task stages) and the
+      ids are integral: ONE ``coalesce(1).mapInArrow`` task relabels the
+      edges to node indices with ``np.unique`` and runs
+      ``solve(n_nodes, iu, iv) -> (ia, ib)``, a vectorized numpy solver
+      over index arrays; the index pairs it returns map back to node ids,
+      cast to the id type, as columns ``names``. This replaces the loop's
+      ~2–3 driver-scheduled jobs per round (broadcast builds, checkpoint,
+      metrics: 40–80 ms of scheduling each for microsecond compute) with
+      one task (r13 §2.2). An empty graph yields a typed empty batch;
+    - otherwise — a graph above the threshold (a post-LSH pair graph at
+      100 TB can be), or any non-integral id type, which the int64 kernel
+      cannot relabel — ``distributed(staged, n_edges, parts)`` runs the
+      caller's Spark loop, which accepts any orderable id. ``parts`` sizes
+      its hash partitioning from the edge count (r12): a session-constant
+      shuffle width would pin every round of a few-hundred-edge graph to
+      dozens of near-empty tasks locally, thousands on a cluster.
+
+    Both paths compute the same fixpoint; ``local_max_edges`` exists so
+    tests can pin them against each other."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    staged = _ckpt_leaf(edges.observe(obs, F.count(F.lit(1)).alias("n")))
+    n_edges = int(obs.get["n"])
+    id_t = staged.schema.fields[0].dataType.simpleString()
+    alias = _ARROW_INT_IDS.get(id_t)
+    if local_max_edges is None:
+        local_max_edges = _CC_ROWS_PER_PART
+    if n_edges <= local_max_edges and alias is not None:
+
+        def kernel(batches):
+            import numpy as np
+            import pyarrow as pa
+
+            cols = ([], [])
+            for b in batches:
+                for acc, col in zip(cols, b.columns):
+                    acc.append(col.to_numpy(zero_copy_only=False))
+            u, v = (
+                np.concatenate(acc).astype(np.int64, copy=False)
+                if acc
+                else np.empty(0, dtype=np.int64)
+                for acc in cols
+            )
+            nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+            ia, ib = solve(nodes.size, inv[: u.size], inv[u.size :]) if u.size else (inv, inv)
+            out_t = pa.type_for_alias(alias)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(nodes[ia]).cast(out_t), pa.array(nodes[ib]).cast(out_t)],
+                names=list(names),
+            )
+
+        return staged.coalesce(1).mapInArrow(kernel, f"{names[0]} {id_t}, {names[1]} {id_t}")
+    shuffle_parts = int(staged.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    parts = max(1, min(shuffle_parts, -(-n_edges // _CC_ROWS_PER_PART)))
+    return distributed(staged, n_edges, parts)
+
+
+def _cc_solve(n_nodes, iu, iv):
+    """Min-label connected components over node indices: the same
+    Shiloach–Vishkin algebra as ``connected_components``' distributed loop
+    (hook every node to the minimum neighbor label, then pointer-jump
+    ``label ← label[label]`` to fixpoint), vectorized. Labels are node
+    indices and ``np.unique`` sorts ascending, so the minimum index is the
+    minimum doc id — exactly the survivor rule."""
+    import numpy as np
+
+    lab = np.arange(n_nodes, dtype=np.int64)
+    while True:
+        prev = lab
+        new = lab.copy()
+        np.minimum.at(new, iu, lab[iv])
+        np.minimum.at(new, iv, lab[iu])
+        lab = new
+        while True:  # pointer-jump path compression to fixpoint
+            nl = lab[lab]
+            if np.array_equal(nl, lab):
+                break
+            lab = nl
+        if np.array_equal(lab, prev):
+            return np.arange(n_nodes), lab
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
@@ -809,7 +847,10 @@ def connected_components(
 ) -> DataFrame:
     """Resolve candidate pairs into duplicate clusters: (doc, component)
     where component = min doc id reachable through the pair graph — the
-    canonical survivor of each near-dup cluster.
+    canonical survivor of each near-dup cluster. Ids may be of any
+    orderable type; a graph that fits one partition with integral ids is
+    solved in one Arrow task (``_small_graph_fixpoint``), any other graph
+    by the distributed loop below.
 
     The Shiloach–Vishkin shape — each outer round HOOKS at tree level
     (aggregate the minimum neighbor-label per current ROOT, so an entire
@@ -830,61 +871,27 @@ def connected_components(
     ``localCheckpoint``-ed: the jump self-joins its input — without a leaf
     there the logical plan would DOUBLE per iteration (rendering it OOMs a
     1 GiB driver after ~10 rounds), and checkpointing keeps every plan
-    constant-depth. Convergence probes are ``limit(1)`` counts against the
-    just-checkpointed frame. Duplicate input pairs are tolerated
-    (min-aggregation is idempotent).
+    constant-depth. The hook and jump convergence flags ride those
+    checkpoint jobs via ``observe`` instead of a probe job per round.
+    Duplicate input pairs are tolerated (min-aggregation is idempotent).
     """
-    # Scale-adaptive partitioning (r12): the iterate frames are PAIR-graph
-    # sized, usually orders of magnitude below the corpus the pairs came
-    # from, yet `repartition("src")` at the session's shuffle-partition
-    # count would pin every one of the O(log n) rounds to that width —
-    # 32 near-empty tasks per stage locally, thousands on a cluster, for
-    # a graph that may hold a few hundred edges. Materialize the edge
-    # list once at its natural width (the checkpoint is needed anyway),
-    # count it (control-plane scalar over checkpointed rows), and derive
-    # the hash-partition width from the actual edge count.
-    # r13 (§1.5/§2.4): every control-plane scalar this loop needs — the
-    # edge count here, the hook/jump convergence flags below — piggybacks
-    # on the checkpoint job itself via `observe` (CollectMetrics runs
-    # inside the materialization pass and the metrics post when the
-    # checkpoint action finishes), instead of a separate probe job per
-    # round. Measured: the probe jobs were ~half the loop's job count.
+    edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).union(
+        pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+    )
+    return _small_graph_fixpoint(
+        edges,
+        ("doc", "component"),
+        _cc_solve,
+        lambda staged, n_edges, parts: _cc_loop(staged, parts, max_iter),
+        local_max_edges,
+    )
+
+
+def _cc_loop(staged: DataFrame, parts: int, max_iter: int) -> DataFrame:
+    """``connected_components``' distributed hook/compress loop over the
+    staged (src, dst) edge leaf, hash-partitioned ``parts`` wide."""
     from pyspark.sql import Observation
 
-    obs_n = Observation()
-    staged = _ckpt_leaf(
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .observe(obs_n, F.count(F.lit(1)).alias("n"))
-    )
-    n_edges = int(obs_n.get["n"])
-    # r13 (§2.2 taken to its conclusion): when the MEASURED edge count says
-    # the whole graph fits one partition — the same `_CC_ROWS_PER_PART`
-    # sizing the distributed loop below would use to pick `parts == 1`,
-    # i.e. every one of its O(log n) rounds would already run as 1-task
-    # stages — resolve the components in ONE vectorized Arrow task over
-    # the checkpointed edge leaf instead of ~2 log(n) driver-scheduled
-    # jobs (each round: broadcast builds + checkpoint + metrics, measured
-    # 40–80 ms of scheduling per job for microsecond compute). Same
-    # min-label fixpoint, same output. At 100 TB a post-LSH pair graph
-    # can exceed the threshold, and then the distributed Shiloach–Vishkin
-    # loop below — unchanged — is the right tool; `local_max_edges` is
-    # parameterized so tests pin both paths against each other.
-    if local_max_edges is None:
-        local_max_edges = _CC_ROWS_PER_PART
-    if n_edges <= local_max_edges:
-        out_t = staged.schema["src"].dataType.simpleString()
-        return staged.coalesce(1).mapInArrow(
-            _cc_local_kernel_factory(out_t), f"doc {out_t}, component {out_t}"
-        )
-    sess = pairs.sparkSession
-    parts = max(
-        1,
-        min(
-            int(sess.conf.get("spark.sql.shuffle.partitions")),
-            (n_edges + _CC_ROWS_PER_PART - 1) // _CC_ROWS_PER_PART,
-        ),
-    )
     edges = staged.repartition(parts, "src").persist()
     labels = _ckpt_leaf(
         edges.select(F.col("src").alias("doc"))

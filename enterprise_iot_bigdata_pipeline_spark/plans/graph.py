@@ -368,8 +368,8 @@ def graph_bfs_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     (localCheckpoint, as in triangle counting); each peel is two hash
 #     aggregates + two key joins over the shrinking support-filtered
 #     edge set, checkpointed per round to keep plans constant-depth.
-#     The per-round count() is a control-plane scalar (the components
-#     precedent), never row data. -----------------------------------------
+#     The per-round edge count is observed on that round's checkpoint
+#     job (no probe job), never row data. ---------------------------------
 
 _KCORE_K = 2
 _KCORE_ROUNDS = 12
@@ -444,19 +444,8 @@ def graph_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     )
-    from pyspark.sql import Observation
-
-    # r13 (§1.5): the edge count rides the checkpoint job via observe —
-    # CollectMetrics runs inside the materialization pass — instead of a
-    # separate count() job (the connected_components convention).
-    obs_e = Observation()
-    e = (
-        _part_pair_edges(li, 2)  # support filter (the oracle's HAVING >= 2)
-        .observe(obs_e, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    n_edges = int(obs_e.get["n"])
-    peeled = _kcore_peel(spark, e, n_edges)
+    # support filter (the oracle's HAVING >= 2)
+    peeled = _kcore_peel(_part_pair_edges(li, 2))
     return (
         peeled.select(F.explode(F.array("pa", "pb")).alias("node"))
         .groupBy("node")
@@ -464,90 +453,43 @@ def graph_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kcore_peel_kernel_factory(id_type: str):
-    """Single-task k-core peel over an edge list that fits ONE partition:
-    the identical round-pinned algebra as the distributed loop in
-    _kcore_peel (``_KCORE_ROUNDS`` rounds, keep nodes with degree ≥
-    ``_KCORE_K``, early-stop on a stable round), vectorized over numpy
-    index arrays. Used only when the measured edge count says every peel
-    round would run as 1-task stages anyway — replaces ~3 driver-scheduled
-    jobs per round (degree agg broadcast builds + checkpoint) with one
-    Arrow task. ``id_type`` pins the output type even for an empty input
-    partition (no batch to infer from)."""
+def _kcore_solve(n_nodes, iu, iv):
+    """The k-core peel over node indices: the distributed loop's
+    round-pinned algebra (``_KCORE_ROUNDS`` rounds, keep edges whose both
+    ends have degree ≥ ``_KCORE_K``, early-stop on a stable round),
+    vectorized."""
+    import numpy as np
 
-    def _kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from enterprise_iot_bigdata_pipeline_spark.operators.dedup import (
-            _arrow_int_type,
-        )
-
-        out_type = _arrow_int_type(id_type)
-        us, vs = [], []
-        for b in batches:
-            us.append(b.column(0).to_numpy(zero_copy_only=False))
-            vs.append(b.column(1).to_numpy(zero_copy_only=False))
-        if us:
-            u = np.concatenate(us).astype(np.int64, copy=False)
-            v = np.concatenate(vs).astype(np.int64, copy=False)
-        else:
-            u = v = np.empty(0, dtype=np.int64)
-        if u.size:
-            nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-            iu, iv = inv[: u.size], inv[u.size :]
-            for _ in range(_KCORE_ROUNDS):
-                if iu.size == 0:
-                    break
-                deg = np.bincount(iu, minlength=nodes.size) + np.bincount(
-                    iv, minlength=nodes.size
-                )
-                ok = deg >= _KCORE_K
-                m = ok[iu] & ok[iv]
-                if m.all():  # stable round — the distributed loop's early stop
-                    break
-                iu, iv = iu[m], iv[m]
-            u, v = nodes[iu], nodes[iv]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(u).cast(out_type), pa.array(v).cast(out_type)],
-            names=["pa", "pb"],
-        )
-
-    return _kernel
+    for _ in range(_KCORE_ROUNDS):
+        if iu.size == 0:
+            break
+        deg = np.bincount(iu, minlength=n_nodes) + np.bincount(iv, minlength=n_nodes)
+        ok = deg >= _KCORE_K
+        m = ok[iu] & ok[iv]
+        if m.all():  # stable round — the distributed loop's early stop
+            break
+        iu, iv = iu[m], iv[m]
+    return iu, iv
 
 
-def _kcore_peel(
-    spark: SparkSession, e: DataFrame, n_edges: int, local_max_edges: int | None = None
-) -> DataFrame:
-    """12-round k-core peel of the checkpointed edge frame ``e``: drop
-    edges touching a node of current degree < ``_KCORE_K`` each round,
-    early-stopping when a round removes nothing. Dispatches between the
-    one-task Arrow kernel (graph fits one partition — the measured-size
-    convention shared with connected_components) and the distributed
-    join loop (unchanged r12 shape) above the threshold."""
-    from enterprise_iot_bigdata_pipeline_spark.operators.dedup import _CC_ROWS_PER_PART
+def _kcore_peel(e: DataFrame, local_max_edges: int | None = None) -> DataFrame:
+    """12-round k-core peel of the (pa, pb) edge frame ``e``: drop edges
+    touching a node of current degree < ``_KCORE_K`` each round,
+    early-stopping when a round removes nothing. ``_small_graph_fixpoint``
+    stages ``e`` and picks the one-task kernel or the distributed join
+    loop."""
+    from enterprise_iot_bigdata_pipeline_spark.operators.dedup import (
+        _small_graph_fixpoint,
+    )
 
+    return _small_graph_fixpoint(e, ("pa", "pb"), _kcore_solve, _kcore_loop, local_max_edges)
+
+
+def _kcore_loop(e: DataFrame, n_edges: int, parts: int) -> DataFrame:
+    """The distributed peel (unchanged r12 shape) over the staged edges,
+    hash-partitioned ``parts`` wide."""
     from pyspark.sql import Observation
 
-    if local_max_edges is None:
-        local_max_edges = _CC_ROWS_PER_PART
-    if n_edges <= local_max_edges:
-        out_t = e.schema["pa"].dataType.simpleString()
-        return e.coalesce(1).mapInArrow(
-            _kcore_peel_kernel_factory(out_t), f"pa {out_t}, pb {out_t}"
-        )
-    # Size the peel loop's stage width from the ACTUAL edge count (the
-    # connected_components r12 convention): the support-filtered edge set
-    # is a small fraction of the pair expansion, and the peel only
-    # shrinks it — session-constant shuffle width would run every one of
-    # the 12 rounds cluster-wide regardless of how little survives.
-    parts = max(
-        1,
-        min(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            (n_edges + _CC_ROWS_PER_PART - 1) // _CC_ROWS_PER_PART,
-        ),
-    )
     e = e.repartition(parts, "pa").localCheckpoint()
     for _ in range(_KCORE_ROUNDS):
         if n_edges == 0:

@@ -172,10 +172,12 @@ def raw_schema(spark: SparkSession, path: str):
     through the same per-application cache ``t`` uses — for callers that
     need the file's raw schema (e.g. streaming readers, which must see
     the file's own ts dtype, not a proxy frame's) without paying the
-    ~75 ms footer-discovery driver cost per query. Caller owns the
-    session-conf preconditions (nanosAsLong), exactly as with ``t``."""
+    ~75 ms footer-discovery driver cost per query. A cache-miss discovery
+    runs under ``t``'s nanosAsLong pin, so the cached schema does not
+    depend on which caller read the path first."""
     _check_cache_epoch(spark)
     if path not in _SCHEMAS:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         _SCHEMAS[path] = spark.read.parquet(path).schema
     return _SCHEMAS[path]
 

@@ -124,7 +124,7 @@ def continuous_rollup(
         )
 
     def upsert(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
+        if not batch.take(1):
             return
         merge_rollup(
             spark, rollup_path, _partials(batch, ts_col, window, keys), keys, epoch_id=epoch_id

@@ -751,3 +751,26 @@ def test_compact_partitions_fans_out_per_partition_files(spark, tmp_path):
         .toString()
     )
     assert "_salt" in plan and "REPARTITION_BY_COL" in plan
+
+
+def test_raw_schema_discovery_ignores_caller_nanos_conf(spark, tmp_path):
+    """``plans/tables.raw_schema`` caches a path's schema for the whole
+    application, so a cache-miss discovery pins nanosAsLong itself: a
+    parquet TIMESTAMP(NANOS) column is discovered as long even when the
+    caller's session has the conf off."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType
+
+    from enterprise_iot_bigdata_pipeline_spark.plans.tables import raw_schema
+
+    path = str(tmp_path / "ns.parquet")
+    ts = pa.array([1_709_287_200_123_456_789], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), path)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert raw_schema(spark, path)["ts"].dataType == LongType()
+    finally:
+        spark.conf.set(key, prev)

@@ -7,6 +7,8 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
+from tests.conftest import count_jobs, job_tasks
+
 
 def test_salted_join_matches_plain_join(spark):
     from enterprise_iot_bigdata_pipeline_spark.operators.salting import salted_join
@@ -207,6 +209,15 @@ def test_connected_components_deep_chain_converges(spark):
     assert got.count() == 201
 
 
+def _driver_actions(jobs):
+    """Jobs the driver thread ran itself (checkpoints, collects), out of
+    ``job_tasks``' list. The distributed graph loops also run AQE's
+    asynchronously submitted shuffle-stage and broadcast jobs, whose
+    number varies by a few with stage timing (connected components 85–86,
+    k-core 73–76 jobs in all over repeated runs of the same graph)."""
+    return sum(not name.startswith("$anonfun$withThreadLocalCaptured") for name, _ in jobs)
+
+
 def test_connected_components_local_kernel_matches_distributed(spark):
     """r13: below `_CC_ROWS_PER_PART` edges the operator resolves
     components in one vectorized Arrow task instead of the distributed
@@ -227,12 +238,25 @@ def test_connected_components_local_kernel_matches_distributed(spark):
     rnd.shuffle(chain_ids)
     edges |= {(chain_ids[i], chain_ids[i + 1]) for i in range(len(chain_ids) - 1)}
     pairs = spark.createDataFrame(sorted(edges), "doc_a long, doc_b long")
-    fast = {(r["doc"], r["component"]) for r in connected_components(pairs).collect()}
-    slow = {
-        (r["doc"], r["component"])
-        for r in connected_components(pairs, local_max_edges=0).collect()
-    }
+    fast, fast_jobs = count_jobs(spark, lambda: connected_components(pairs).collect())
+    slow, slow_jobs = job_tasks(
+        spark, lambda: connected_components(pairs, local_max_edges=0).collect()
+    )
+    fast = {(r["doc"], r["component"]) for r in fast}
+    slow = {(r["doc"], r["component"]) for r in slow}
     assert fast == slow and len(fast) > 0
+    # job budgets measured before the two paths shared one dispatch helper
+    assert fast_jobs <= 2 and _driver_actions(slow_jobs) <= 20
+
+    # non-integral ids: the one-task kernel cannot relabel them, so the
+    # default dispatch must take the distributed loop, not crash
+    spairs = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], "doc_a string, doc_b string"
+    )
+    want = [("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")]
+    for lm in (None, 0):
+        got = connected_components(spairs, local_max_edges=lm).collect()
+        assert sorted((r["doc"], r["component"]) for r in got) == want
 
     empty = pairs.filter("doc_a < 0")
     out = connected_components(empty)
@@ -260,20 +284,30 @@ def test_kcore_peel_local_kernel_matches_distributed(spark):
         a, b = rnd.randrange(0, 60), rnd.randrange(0, 60)
         if a != b:
             edges.add((min(a, b), max(a, b)))
-    e = spark.createDataFrame(sorted(edges), "pa long, pb long").localCheckpoint()
-    n = len(edges)
-    fast = {(r["pa"], r["pb"]) for r in _kcore_peel(spark, e, n).collect()}
-    slow = {
-        (r["pa"], r["pb"])
-        for r in _kcore_peel(spark, e, n, local_max_edges=0).collect()
-    }
+    e = spark.createDataFrame(sorted(edges), "pa long, pb long")
+    fast, fast_jobs = count_jobs(spark, lambda: _kcore_peel(e).collect())
+    slow, slow_jobs = job_tasks(spark, lambda: _kcore_peel(e, local_max_edges=0).collect())
+    fast = {(r["pa"], r["pb"]) for r in fast}
+    slow = {(r["pa"], r["pb"]) for r in slow}
     assert fast == slow
+    # job budgets (edge staging included) measured before the two paths
+    # shared one dispatch helper
+    assert fast_jobs <= 2 and _driver_actions(slow_jobs) <= 15
     # the 5-clique must survive a K=2 peel; the chain's ENDS are peeled
     # one node per pinned round (12 rounds → 12 nodes off each side),
     # its middle legitimately survives the round-pinned peel
     assert {(100, 101), (103, 104)} <= fast
     assert (200, 201) not in fast and (239, 240) not in fast
     assert (219, 220) in fast
+
+    # non-integral ids take the distributed loop on the default dispatch
+    se = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")], "pa string, pb string"
+    )
+    want = [("a", "b"), ("a", "c"), ("b", "c")]
+    for lm in (None, 0):
+        got = _kcore_peel(se, local_max_edges=lm).collect()
+        assert sorted((r["pa"], r["pb"]) for r in got) == want
 
 
 def test_hot_lsh_bucket_star_fallback(spark):
