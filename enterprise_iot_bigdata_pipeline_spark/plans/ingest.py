@@ -1,14 +1,19 @@
 """Ingest/maintenance-surface queries: the repair audit (the reference's
-de-facto correctness check), multimodal metadata, and a real Structured
-Streaming run (rows-only: streaming state isn't SQL-expressible).
+de-facto correctness check), multimodal metadata, and real Structured
+Streaming runs drained through one shared slot protocol (``stream_slot``).
 """
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from enterprise_iot_bigdata_pipeline_spark.functions.epoch import (
     NORMALIZE_EPOCH_SQL,
@@ -18,7 +23,7 @@ from enterprise_iot_bigdata_pipeline_spark.functions.epoch import (
 from enterprise_iot_bigdata_pipeline_spark.functions.parity import DSUM_SQL
 from enterprise_iot_bigdata_pipeline_spark.operators.multimodal import attach_fake_media
 from enterprise_iot_bigdata_pipeline_spark.plans import register
-from enterprise_iot_bigdata_pipeline_spark.plans.tables import t
+from enterprise_iot_bigdata_pipeline_spark.plans.tables import raw_schema, t
 
 # Audit hook: each streaming slot records its last EXECUTED streaming
 # physical plan here (explainInternal after the availableNow run), so
@@ -27,12 +32,131 @@ from enterprise_iot_bigdata_pipeline_spark.plans.tables import t
 # readback) cannot show. Capture-only — never load-bearing for the query result.
 STREAM_PLANS: dict[str, str] = {}
 
+_STREAM_STATE_PARTS = 8
 
-def record_stream_plan(name: str, q) -> None:
+
+class _StreamSlot:
+    """The staged inbox and drain calls of one ``stream_slot`` run."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        src: str,
+        parts: list[str],
+        work: str,
+        one_file_per_batch: bool,
+    ):
+        self.spark, self.work = spark, work
+        self._src, self._parts, self._one_file = src, parts, one_file_per_batch
+        self._stage = os.path.join(work, "stage")
+        self._arrived = 0
+        os.mkdir(self._stage)
+
+    def arrive(self) -> None:
+        """Land one more copy of the events table in the inbox, its part
+        files linked one by one: the file source does not recurse into a
+        non-partition subdirectory, so a linked directory adds no input."""
+        for i, part in enumerate(self._parts):
+            os.symlink(
+                part, os.path.join(self._stage, f"events_{self._arrived}_{i:05d}.parquet")
+            )
+        self._arrived += 1
+
+    def stream(self) -> DataFrame:
+        """File-source stream over the inbox with ``ts`` as TIMESTAMP. The
+        stream reads the file's RAW schema (``t``'s ns→µs rewrite does not
+        apply), so the conversion branches on the stream's own dtype."""
+        reader = self.spark.readStream.schema(raw_schema(self.spark, self._src))
+        if self._one_file:
+            reader = reader.option("maxFilesPerTrigger", 1)
+        stream = reader.parquet(self._stage)
+        raw_ts = dict(stream.dtypes).get("ts")
+        if raw_ts == "bigint":
+            stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        elif raw_ts == "timestamp_ntz":
+            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        return stream
+
+    def drain(self, key: str, query: DataStreamWriter | StreamingQuery) -> None:
+        """Run ``query`` (a writer, or a query a library already started)
+        to the end of the inbox and record its executed plan under ``key``."""
+        if isinstance(query, DataStreamWriter):
+            query = query.trigger(availableNow=True).start()
+        query.awaitTermination()
+        try:
+            STREAM_PLANS[key] = query._jsq.explainInternal(True)
+        except Exception:  # noqa: BLE001 — audit-only, never fail the query
+            pass
+
+    def memory(self, key: str, df: DataFrame, mode: str = "append") -> DataFrame:
+        """Drain ``df`` into a memory sink and return its rows. The rows
+        live on the driver: localCheckpoint detaches them from the sink and
+        dropTempView releases the sink's copy, so repeated runs do not pin
+        one result set per invocation for the session's lifetime."""
+        view = f"stream_{uuid.uuid4().hex[:8]}"
+        self.drain(key, df.writeStream.outputMode(mode).format("memory").queryName(view))
+        out = self.spark.table(view).localCheckpoint(eager=True)
+        self.spark.catalog.dropTempView(view)
+        return out
+
+
+@contextlib.contextmanager
+def stream_slot(spark: SparkSession, sf_dir: str, n_copies: int = 1):
+    """The drain protocol of every registry ``streaming_*`` slot: the events
+    table replayed through a file-source stream and drained with an
+    ``availableNow`` trigger (the reference's hourly claim/SUCCESS loop as
+    trigger-once-as-batch). Yields a ``_StreamSlot`` whose inbox holds
+    ``n_copies`` arrivals of the table; a slot keeps only its operator,
+    output ``select`` and readback.
+
+    ``t`` runs first for its session-conf side effects (UTC pin +
+    nanosAsLong on the driver-owned session), which the stream's reader
+    needs. The work dir (inbox, checkpoints, sinks) is removed on exit.
+
+    State partitions: a stateful query pins its state-store partition count
+    from ``spark.sql.shuffle.partitions`` at start, and per-partition store
+    setup/commit dominates at registry volumes (measured on the
+    stream-stream join, four stores per partition: 32 partitions 7.2 s vs
+    8 partitions 3.5 s warm, identical rows). The slot runs at
+    ``min(session partitions, _STREAM_STATE_PARTS)`` and restores the
+    session value on exit; each run owns a fresh checkpoint, so the
+    pinned-at-start count never outlives it. A deployment at real volume
+    sets the session to its real parallelism.
+
+    ``n_copies > 1`` drains one micro-batch per copy (one file per
+    trigger). The file source orders files by modification time and a
+    link shares its target's, so copies of a multi-part table cannot be
+    kept one per batch: that layout raises ValueError instead of
+    returning a wrong epoch count.
+    """
+    t(spark, sf_dir, "events")
+    src = f"{sf_dir}/events.parquet"
+    if os.path.isdir(src):
+        parts = sorted(
+            os.path.join(src, f) for f in os.listdir(src) if f.endswith(".parquet")
+        )
+        if not parts:
+            raise ValueError(f"no parquet part files under {src}")
+    else:
+        parts = [src]
+    if n_copies > 1 and len(parts) > 1:
+        raise ValueError(
+            f"a {n_copies}-copy streaming drain needs a single-file events table; "
+            f"{src} is a directory of {len(parts)} part files, whose copies "
+            "cannot be kept one per micro-batch"
+        )
+    conf = "spark.sql.shuffle.partitions"
+    prev_parts = spark.conf.get(conf)
+    work = tempfile.mkdtemp(prefix="stream_slot_")
     try:
-        STREAM_PLANS[name] = q._jsq.explainInternal(True)
-    except Exception:  # noqa: BLE001 — audit-only, never fail the query
-        pass
+        spark.conf.set(conf, str(min(int(prev_parts), _STREAM_STATE_PARTS)))
+        slot = _StreamSlot(spark, src, parts, work, one_file_per_batch=n_copies > 1)
+        for _ in range(n_copies):
+            slot.arrive()
+        yield slot
+    finally:
+        spark.conf.set(conf, prev_parts)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -275,86 +399,27 @@ GROUP BY 1, 2
 
 @register("streaming_hour_agg", _STREAM_HOUR_ORACLE)
 def streaming_hour_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
+    from enterprise_iot_bigdata_pipeline_spark.streaming.ingest import windowed_event_agg
 
-    # Load-bearing for its session-conf side effects (UTC pinning + reader
-    # confs on the driver-owned session), not for the frame itself.
-    t(spark, sf_dir, "events")
-    stream, stage = _stage_events_stream(spark, sf_dir)
-    try:
-        agg = (
+    with stream_slot(spark, sf_dir) as slot:
+        agg = windowed_event_agg(
             # explicit: NULL-event-time rows never enter the windowed agg
             # (windowing/watermark would drop them silently; the oracle
             # pins the same exclusion)
-            stream.filter(F.col("ts").isNotNull())
-            .withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                # NTZ cast mirrors flagship_minute_resample: window starts are
-                # UTC-aligned (tables.t pins the session to UTC), matching
-                # DuckDB's naive date_trunc over the TIMESTAMP(NANOS) column.
-                F.col("w.start").cast("timestamp_ntz").alias("hour_start"),
-                "event_type",
-                "n_events",
-            )
+            slot.stream().filter(F.col("ts").isNotNull()),
+            "1 hour",
+            "1 hour",
+            ts_col="ts",
+            keys=("event_type",),
+        ).select(
+            # NTZ cast mirrors flagship_minute_resample: window starts are
+            # UTC-aligned (tables.t pins the session to UTC), matching
+            # DuckDB's naive date_trunc over the TIMESTAMP(NANOS) column.
+            F.col("window_start").cast("timestamp_ntz").alias("hour_start"),
+            "event_type",
+            "n_events",
         )
-        name = f"stream_agg_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_stream_plan("streaming_hour_agg", q)
-        # Memory sink rows live on the driver — safe to drop the staged input
-        # dir right away (no /tmp leak per run). localCheckpoint + dropTempView
-        # also release the sink's driver copy, so repeated bench runs don't
-        # pin one result set per invocation.
-        out_df = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out_df
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-def _stage_events_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    n_copies: int = 1,
-    max_files_per_trigger: int | None = None,
-):
-    """File-source stream over the events table (symlink staging — the
-    streaming source needs a directory; ``n_copies`` symlinks the file
-    several times, e.g. to force a multi-batch availableNow run) with the
-    ts column normalized to TIMESTAMP. The stream reads the file's RAW schema (tables.t's ns→µs
-    rewrite does not apply), so the conversion branches on the STREAM's
-    dtype, never a proxy frame's (the r03 bench-kill lesson). Returns
-    (stream, stage_dir); the caller owns the directory's lifetime."""
-    import os
-    import tempfile
-
-    stage = tempfile.mkdtemp(prefix="stream_events_")
-    for i in range(n_copies):
-        os.symlink(
-            f"{sf_dir}/events.parquet", os.path.join(stage, f"events_{i}.parquet")
-        )
-    from enterprise_iot_bigdata_pipeline_spark.plans.tables import raw_schema
-
-    # r13 (§5 driver): the events schema is footer-discovered once per
-    # application (the t() cache), not once per streaming slot.
-    reader = spark.readStream.schema(raw_schema(spark, f"{sf_dir}/events.parquet"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(stage)
-    raw_ts = dict(stream.dtypes).get("ts")
-    if raw_ts == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif raw_ts == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream, stage
+        return slot.memory("streaming_hour_agg", agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -381,27 +446,14 @@ WHERE c.event_type = 'click' AND p.event_type = 'purchase'
 
 @register("streaming_click_purchase_join", _STREAM_JOIN_ORACLE)
 def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from enterprise_iot_bigdata_pipeline_spark.streaming.joins import (
         clicks_purchases_join,
     )
 
-    # Session-conf side effects (UTC pin + nanosAsLong on the driver-owned
-    # session) — the staged stream needs the same reader confs.
-    t(spark, sf_dir, "events")
-    stream, stage = _stage_events_stream(spark, sf_dir)
-    # A stream-stream join keeps FOUR state stores per partition; the state
-    # partition count is pinned from spark.sql.shuffle.partitions at query
-    # start, and per-partition store setup/commit dominates at this volume
-    # (measured: 32 partitions 7.2 s vs 8 partitions 3.5 s warm, identical
-    # rows). Size state to the stream and RESTORE the session conf — the
-    # query owns a fresh checkpoint + memory sink, so the pinned-at-start
-    # semantics never leak past the try/finally. A 100 TB deployment sets
-    # this to its real parallelism.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # A stream-stream join keeps FOUR state stores per partition — the
+    # slot the stream_slot state-partition cap was measured on.
+    with stream_slot(spark, sf_dir) as slot:
+        stream = slot.stream()
         joined = clicks_purchases_join(
             stream.filter(F.col("event_type") == "click"),
             stream.filter(F.col("event_type") == "purchase"),
@@ -417,22 +469,7 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
             "click_id",
             "purchase_id",
         )
-        name = f"stream_join_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_stream_plan("streaming_click_purchase_join", q)
-        out_df = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out_df
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(stage, ignore_errors=True)
+        return slot.memory("streaming_click_purchase_join", joined)
 
 
 # ---------------------------------------------------------------------------
@@ -457,47 +494,31 @@ GROUP BY c.c_mktsegment, e.event_type
 
 @register("streaming_enrich_dim", _STREAM_ENRICH_ORACLE)
 def streaming_enrich_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    t(spark, sf_dir, "events")  # session-conf side effects
-    dim = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    stream, stage = _stage_events_stream(spark, sf_dir)
-    try:
-        enriched = stream.join(
-            F.broadcast(dim), stream.user_id == dim.c_custkey
+    with stream_slot(spark, sf_dir) as slot:
+        dim = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+        stream = slot.stream()
+        agg = (
+            stream.join(F.broadcast(dim), stream.user_id == dim.c_custkey)
+            .groupBy("c_mktsegment", "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(25,6)"))
+                .cast("double")
+                .alias("sum_value"),
+            )
         )
-        agg = enriched.groupBy("c_mktsegment", "event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(25,6)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_stream_plan("streaming_enrich_dim", q)
-        out_df = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out_df
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        return slot.memory("streaming_enrich_dim", agg, "complete")
 
 
 # ---------------------------------------------------------------------------
-# PRODUCTION-SINK streaming round-trip: the five other streaming slots
+# PRODUCTION-SINK streaming round-trip: most other streaming slots
 # gate the streaming SEMANTICS through memory sinks (driver-collected);
 # this one gates the production WRITE path — foreachBatch →
 # streaming.ingest.write_epoch_batch (idempotent epoch-partitioned parquet
 # with dynamic partition overwrite, the reference's SUCCESS-claim
 # machinery re-expressed, s3_datalog_processor.py:46-243) — and proves it
-# by READING THE SINK BACK for the oracle. The events file is staged
-# twice with maxFilesPerTrigger=1, so TWO micro-batches land as two
+# by READING THE SINK BACK for the oracle. stream_slot stages the events
+# file twice, one micro-batch per copy, so TWO micro-batches land as two
 # ingest_epoch partitions; the readback aggregate sees doubled counts and
 # exactly 2 epochs per event-date, which the oracle recomputes with 2×
 # algebra (the rollup-merge convention). A hash-green row proves: the
@@ -520,43 +541,27 @@ GROUP BY 1
 
 @register("streaming_sink_parquet_epoch", _SINK_ROUNDTRIP_ORACLE)
 def streaming_sink_parquet_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
+    from pyspark.sql.types import LongType, StructField, StructType
 
+    from enterprise_iot_bigdata_pipeline_spark.sources.lake import read_lake
     from enterprise_iot_bigdata_pipeline_spark.streaming.ingest import (
         write_epoch_batch,
     )
 
-    t(spark, sf_dir, "events")  # session-conf side effects (UTC + nanosAsLong)
-    work = tempfile.mkdtemp(prefix="sink_rt_")
-    target = os.path.join(work, "lake")
-    stream, stage = _stage_events_stream(
-        spark, sf_dir, n_copies=2, max_files_per_trigger=1
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with stream_slot(spark, sf_dir, n_copies=2) as slot:
+        target = os.path.join(slot.work, "lake")
         enriched = (
-            stream.filter(F.col("ts").isNotNull())
+            slot.stream()
+            .filter(F.col("ts").isNotNull())
             .withColumn("hiveperiod", F.to_date("ts"))
             .withColumn("dstrct_code", F.lit("D1"))
         )
-
-        q = (
+        slot.drain(
+            "streaming_sink_parquet_epoch",
             enriched.writeStream.foreachBatch(
                 lambda batch_df, epoch_id: write_epoch_batch(batch_df, target, epoch_id)
-            )
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            ).option("checkpointLocation", os.path.join(slot.work, "ckpt")),
         )
-        q.awaitTermination()
-        record_stream_plan("streaming_sink_parquet_epoch", q)
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        from enterprise_iot_bigdata_pipeline_spark.sources.lake import read_lake
-
         # the sink skips empty batches, so ZERO input rows leaves NO lake
         # dir at all — the readback must see an empty typed table, not
         # PATH_NOT_FOUND (empty-corpus probe, round 12); the schema is the
@@ -564,7 +569,7 @@ def streaming_sink_parquet_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink_schema = StructType(
             enriched.schema.fields + [StructField("ingest_epoch", LongType())]
         )
-        out = (
+        return (
             read_lake(spark, target, empty_schema=sink_schema)
             .groupBy("hiveperiod", "dstrct_code")
             .agg(
@@ -583,11 +588,6 @@ def streaming_sink_parquet_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1173,36 +1173,13 @@ def pysource_ramp_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     late=True,
 )
 def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from enterprise_iot_bigdata_pipeline_spark.streaming.ingest import stream_dedup
 
-    t(spark, sf_dir, "events")  # session-conf side effects (UTC + nanosAsLong)
-    stream, stage = _stage_events_stream(spark, sf_dir)
-    # One state store; size its partition count to the stream volume (the
-    # streaming_click_purchase_join lesson) and restore the session conf.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        deduped = stream_dedup(stream, ("user_id", "event_type")).select(
+    with stream_slot(spark, sf_dir) as slot:
+        deduped = stream_dedup(slot.stream(), ("user_id", "event_type")).select(
             "user_id", "event_type"
         )
-        name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_stream_plan("streaming_dedup_keys", q)
-        out_df = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out_df
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(stage, ignore_errors=True)
+        return slot.memory("streaming_dedup_keys", deduped)
 
 
 # ---------------------------------------------------------------------------
@@ -1210,7 +1187,7 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The operator emits CLOSED sessions only; in a drain-style availableNow run
 # each user's trailing session stays open in the state store — so the
 # DuckDB oracle is gap-sessionization MINUS each user's last session.
-# Single-file staging → one microbatch → per-key event-time sort inside the
+# One staged copy → one microbatch → per-key event-time sort inside the
 # state function makes the run deterministic. Timestamps are µs-truncated
 # on both sides (the state function stores µs; the oracle floors ns → µs).
 # ---------------------------------------------------------------------------
@@ -1253,17 +1230,11 @@ WHERE sid < (SELECT max(g2.sid) FROM g g2 WHERE g2.user_id = g.user_id)
 
 @register("streaming_sessionize_state", _STREAM_SESSION_ORACLE, late=True)
 def streaming_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from enterprise_iot_bigdata_pipeline_spark.streaming.stateful import track_sessions
 
-    t(spark, sf_dir, "events")  # session-conf side effects
-    stream, stage = _stage_events_stream(spark, sf_dir)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with stream_slot(spark, sf_dir) as slot:
         sessions = track_sessions(
-            stream.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull()),
+            slot.stream().filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull()),
             gap_seconds=_SESSIONIZE_GAP_S,
         ).select(
             "user_id",
@@ -1273,28 +1244,13 @@ def streaming_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("session_end").cast("timestamp_ntz").alias("session_end"),
             "n_events",
         )
-        name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_stream_plan("streaming_sessionize_state", q)
-        out_df = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out_df
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(stage, ignore_errors=True)
+        return slot.memory("streaming_sessionize_state", sessions)
 
 
 # ---------------------------------------------------------------------------
 # Continuous rollup (hypertable-style incremental aggregate), executed for
-# real THROUGH ITS MERGE PATH: the events file is staged twice and
-# maxFilesPerTrigger=1 forces two micro-batches, so batch 2's partials
+# real THROUGH ITS MERGE PATH: stream_slot stages the events file twice,
+# one micro-batch per copy, so batch 2's partials
 # additively MERGE into the rollup table batch 1 initialized (sums/counts
 # add; epoch commit markers guard replay) — the code path a single-batch
 # run never touches. Over doubled input the oracle is the hourly aggregate
@@ -1317,36 +1273,27 @@ GROUP BY 1, 2
 
 @register("streaming_rollup_merge", _ROLLUP_ORACLE, late=True)
 def streaming_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from enterprise_iot_bigdata_pipeline_spark.streaming.rollup import (
         continuous_rollup,
         read_rollup,
     )
 
-    t(spark, sf_dir, "events")  # session-conf side effects (UTC + nanosAsLong)
-    work = tempfile.mkdtemp(prefix="rollup_out_")
-    stream, stage = _stage_events_stream(
-        spark, sf_dir, n_copies=2, max_files_per_trigger=1
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = continuous_rollup(
-            spark,
-            # explicit NULL-event-time exclusion (the hour-agg note)
-            stream.filter(F.col("ts").isNotNull()),
-            rollup_path=os.path.join(work, "rollup"),
-            checkpoint=os.path.join(work, "ckpt"),
-            window="1 hour",
-            keys=("event_type",),
+    with stream_slot(spark, sf_dir, n_copies=2) as slot:
+        rollup = os.path.join(slot.work, "rollup")
+        slot.drain(
+            "streaming_rollup_merge",
+            continuous_rollup(
+                spark,
+                # explicit NULL-event-time exclusion (the hour-agg note)
+                slot.stream().filter(F.col("ts").isNotNull()),
+                rollup_path=rollup,
+                checkpoint=os.path.join(slot.work, "ckpt"),
+                window="1 hour",
+                keys=("event_type",),
+            ),
         )
-        q.awaitTermination()
-        record_stream_plan("streaming_rollup_merge", q)
-        out = (
-            read_rollup(spark, os.path.join(work, "rollup"))
+        return (
+            read_rollup(spark, rollup)
             .select(
                 # NTZ cast mirrors streaming_hour_agg (UTC pin ≡ naive oracle)
                 F.col("window_start").cast("timestamp_ntz").alias("window_start"),
@@ -1356,11 +1303,6 @@ def streaming_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1455,76 +1397,28 @@ GROUP BY 1
 
 @register("streaming_checkpoint_recovery", _CKPT_RECOVERY_ORACLE)
 def streaming_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
+    with stream_slot(spark, sf_dir) as slot:
+        target = os.path.join(slot.work, "lake")
+        ckpt = os.path.join(slot.work, "ckpt")
 
-    t(spark, sf_dir, "events")  # session-conf side effects (UTC + nanosAsLong)
-    work = tempfile.mkdtemp(prefix="ckpt_rec_")
-    stage = os.path.join(work, "stage")
-    target = os.path.join(work, "lake")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(stage)
-    from enterprise_iot_bigdata_pipeline_spark.plans.tables import raw_schema
-
-    schema = raw_schema(spark, f"{sf_dir}/events.parquet")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-
-    def run_once(tag: str) -> None:
-        stream = spark.readStream.schema(schema).parquet(stage)
-        raw_ts = dict(stream.dtypes).get("ts")
-        if raw_ts == "bigint":
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
+        def run_once(key: str) -> None:
+            slot.drain(
+                key,
+                slot.stream()
+                .filter(F.col("ts").isNotNull())
+                .select("ts", "value")
+                .writeStream.format("parquet")
+                .option("path", target)
+                .option("checkpointLocation", ckpt),
             )
-        elif raw_ts == "timestamp_ntz":
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        q = (
-            stream.filter(F.col("ts").isNotNull())
-            .select("ts", "value")
-            .writeStream.format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+
         # run2 (the restart) is the audited plan — recovery is the story;
         # run1 rides along under a suffixed key for inspection
-        key = (
-            "streaming_checkpoint_recovery"
-            if tag == "run2"
-            else f"streaming_checkpoint_recovery:{tag}"
-        )
-        record_stream_plan(key, q)
-
-    def arrive(tag: str) -> None:
-        # "file arrival": symlink the source into the staged inbox. A
-        # directory-shaped table (multi-file Spark write) links its part
-        # files individually — the file-source stream does not recurse
-        # into non-partition subdirectories, so a directory symlink would
-        # silently contribute zero input files.
-        src = f"{sf_dir}/events.parquet"
-        if os.path.isdir(src):
-            parts = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
-            if not parts:
-                raise ValueError(f"no parquet part files under {src}")
-            for i, f in enumerate(parts):
-                os.symlink(
-                    os.path.join(src, f),
-                    os.path.join(stage, f"{tag}_{i:05d}.parquet"),
-                )
-        else:
-            os.symlink(src, os.path.join(stage, f"{tag}.parquet"))
-
-    try:
-        arrive("a")
-        run_once("run1")
-        # batch B arrives AFTER run 1 fully terminated; run 2 is a genuine
+        run_once("streaming_checkpoint_recovery:run1")
+        # copy B arrives AFTER run 1 fully terminated; run 2 is a genuine
         # restart (new query object, same checkpoint) and must see only B
-        arrive("b")
-        run_once("run2")
+        slot.arrive()
+        run_once("streaming_checkpoint_recovery")
         return (
             spark.read.parquet(target)
             .groupBy(F.to_date("ts").alias("event_date"))
@@ -1536,9 +1430,6 @@ def streaming_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

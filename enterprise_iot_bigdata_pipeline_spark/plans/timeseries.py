@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from enterprise_iot_bigdata_pipeline_spark.functions.parity import DAVG_SQL, davg
 from enterprise_iot_bigdata_pipeline_spark.plans import register
+from enterprise_iot_bigdata_pipeline_spark.plans.ingest import stream_slot
 from enterprise_iot_bigdata_pipeline_spark.plans.tables import t
 
 # --- M4 downsampling: per (series, time bucket) emit min / max / first /
@@ -489,7 +490,7 @@ def timeseries_anomaly_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     SQL as the batch query — hash-green proves the streaming state
 #     algebra reproduces the decimal-exact batch flags bit-for-bit at
 #     driver scale (the pytest additionally proves it across multi-batch
-#     splits). Staging mirrors streaming_hour_agg (plans/ingest.py). -------
+#     splits). Staged and drained by plans/ingest.py's stream_slot. ---------
 
 
 @register(
@@ -497,61 +498,17 @@ def timeseries_anomaly_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     _Z_ORACLE,
 )
 def streaming_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from enterprise_iot_bigdata_pipeline_spark.streaming.anomaly import (
         stream_anomaly_zscore,
     )
 
-    # session-conf side effects (UTC pin + nanosAsLong) — see streaming_hour_agg
-    t(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="stream_anom_")
-    os.symlink(f"{sf_dir}/events.parquet", os.path.join(stage, "events.parquet"))
-    try:
-        from enterprise_iot_bigdata_pipeline_spark.plans.tables import raw_schema
-
-        stream = spark.readStream.schema(
-            raw_schema(spark, f"{sf_dir}/events.parquet")
-        ).parquet(stage)
-        raw_ts = dict(stream.dtypes).get("ts")
-        if raw_ts == "bigint":
-            stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif raw_ts == "timestamp_ntz":
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    with stream_slot(spark, sf_dir) as slot:
         # mirror the _Z_ORACLE/batch-twin contract: un-timestamped rows
         # have no position in the trailing window (nasty-events battery)
-        stream = stream.filter(F.col("ts").isNotNull())
-        out = stream_anomaly_zscore(stream, window=_Z_WIN, min_n=_Z_MIN)
-        name = f"stream_anom_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        from enterprise_iot_bigdata_pipeline_spark.plans.ingest import (
-            record_stream_plan,
-        )
-
-        record_stream_plan("streaming_anomaly_zscore", q)
-        # sever the memory-sink view before returning: localCheckpoint
-        # materializes the rows, dropTempView releases the sink's driver
-        # copy (repeated bench runs would otherwise pin one result set
-        # per invocation for the session's lifetime)
-        out_df = (
-            spark.table(name)
-            .withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-            .localCheckpoint(eager=True)
-        )
-        spark.catalog.dropTempView(name)
-        return out_df
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        out = stream_anomaly_zscore(
+            slot.stream().filter(F.col("ts").isNotNull()), window=_Z_WIN, min_n=_Z_MIN
+        ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+        return slot.memory("streaming_anomaly_zscore", out)
 
 
 # --- Winsorization: clamp each series' values to its exact [p01, p99]

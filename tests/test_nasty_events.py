@@ -145,9 +145,15 @@ def _streaming_battery():
     sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
     import __spark_entry__ as e
 
+    from tools.explain_audit import STREAM_AUDITED
+
     oracles = e.oracle_sql()
     names = [n for n in e.queries() if n.startswith("streaming_") and n in oracles]
-    assert len(names) >= 8, f"streaming battery shrank suspiciously: {names}"
+    # every oracle-backed streaming slot is also state-store plan audited
+    # (and vice versa): a new slot cannot skip either check
+    assert set(names) == STREAM_AUDITED, (
+        f"streaming battery {sorted(names)} != STREAM_AUDITED {sorted(STREAM_AUDITED)}"
+    )
     return names
 
 
@@ -171,6 +177,47 @@ def test_streaming_slot_survives_null_timestamps(spark, nasty_null_ts_dir, name)
         )
     finally:
         con.close()
+
+
+# slots that drain one micro-batch per staged copy of the events table
+_MULTI_COPY_SLOTS = {"streaming_sink_parquet_epoch", "streaming_rollup_merge"}
+
+
+@pytest.fixture(scope="session")
+def multipart_events_dir(spark, tmp_path_factory):
+    """sf0.001 with events.parquet rewritten by Spark as a directory of
+    part files (the layout a Spark job leaves behind), other tables linked."""
+    from enterprise_iot_bigdata_pipeline_spark.plans.tables import t
+
+    d = tmp_path_factory.mktemp("multipart_sf")
+    for f in os.listdir(SF_SMOKE):
+        if f != "events.parquet":
+            os.symlink(os.path.join(SF_SMOKE, f), str(d / f))
+    t(spark, SF_SMOKE, "events").repartition(3).write.parquet(str(d / "events.parquet"))
+    parts = [f for f in os.listdir(d / "events.parquet") if f.endswith(".parquet")]
+    assert len(parts) == 3, parts
+    return str(d)
+
+
+@pytest.mark.parametrize("name", _streaming_battery())
+def test_streaming_slot_reads_multipart_events(spark, multipart_events_dir, name):
+    """A directory-shaped events table feeds a streaming slot every part
+    file: single-copy slots return exactly their single-file result;
+    the multi-copy slots refuse the layout loudly (linked copies share
+    their targets' mtimes, so no staging keeps one copy per micro-batch)."""
+    import __spark_entry__ as e
+    from oracle_compare import canonical_hash, canonical_rows
+
+    fn = e.queries()[name]
+    if name in _MULTI_COPY_SLOTS:
+        with pytest.raises(ValueError, match="directory of 3 part files"):
+            fn(spark, multipart_events_dir)
+        return
+    single = canonical_rows(fn(spark, SF_SMOKE).toPandas())
+    multi = canonical_rows(fn(spark, multipart_events_dir).toPandas())
+    assert single, f"{name}: empty single-file result proves nothing"
+    assert len(multi) == len(single), f"{name}: rows multipart={len(multi)} file={len(single)}"
+    assert canonical_hash(multi) == canonical_hash(single), name
 
 
 @pytest.mark.parametrize("name", _battery())

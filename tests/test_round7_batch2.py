@@ -174,9 +174,8 @@ class TestChiSquare:
 
 class TestStreamingDrainSemantics:
     def _events(self, spark, tmp_path):
-        # The streaming staging (plans/ingest._stage_events_stream) symlinks
-        # sf_dir/events.parquet as a single FILE (the testdata layout), so
-        # write one real parquet file here, not a Spark output directory.
+        # One pyarrow file (the testdata layout); plans/ingest.stream_slot
+        # also stages a Spark output directory part by part.
         rows = [
             # user 1: two closed sessions + a trailing open one (gap 1800 s)
             (1, "2024-01-01 00:00:00", 1, "view", 1.0, ""),
